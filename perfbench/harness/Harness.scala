@@ -1,7 +1,8 @@
 package perfbench
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.CachedData
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
@@ -13,15 +14,15 @@ import scala.util.Random
   *
   * A run sets up the session (and the workload's amplified input), warms up
   * with untimed passes at the measured scale, then times whole passes in a
-  * seed-permuted order until `--seconds` have gone by. Every operation
-  * is timed cold: whatever it leaves persisted is counted as leaked and
-  * released before the next one starts, so no operation is served from an
-  * earlier one's cache. Outputs are fingerprinted after each operation and
+  * seed-permuted order until `--seconds` have gone by, at least two. Every
+  * operation is timed cold: whatever it leaves persisted is counted as
+  * leaked and released before the next one starts, so no operation is
+  * served from an earlier one's cache. Outputs are fingerprinted after each operation and
   * compared with the oracle after the timed loop.
   *
   * Usage: perfbench.Harness --workload W --seed N --seconds S --trace 0|1
-  *   --data DIR --oracle DIR --expected FILE --out FILE --launch-ms EPOCH_MS
-  *   --local-dir DIR [--cpus N] [--min-passes N]
+  *   --data DIR --table-rows T=N,... --queries Q,... --oracle DIR --expected FILE
+  *   --out FILE --launch-ms EPOCH_MS --local-dir DIR [--cpus N]
   */
 object Harness {
   final case class Sample(
@@ -37,6 +38,7 @@ object Harness {
       heldMb: Double,
       spans: Map[String, Double],
       layers: Map[String, Double],
+      tables: Set[String],
       fingerprint: Option[Fingerprint],
       error: Option[String]
   )
@@ -48,43 +50,47 @@ object Harness {
     val seconds = args("seconds").toDouble
     val trace = args("trace") == "1"
     val dataDir = args("data")
-    val minPasses = args.getOrElse("min-passes", "1").toInt
     val cpus = args.getOrElse("cpus", "4")
 
     val spark = session(cpus, args("local-dir"))
     val sc = spark.sparkContext
 
-    // the listeners run through warm-up in every run: the scan rows they
-    // see there give rows_per_s without tracing the timed passes
+    // the listeners run through warm-up in every run: the first warm-up
+    // pass, cold in a fresh JVM, is the reference the self-test compares
+    // every timed pass with
     val tracer = new Tracer
     sc.addSparkListener(tracer)
     spark.listenerManager.register(tracer)
 
     val sessionMs = System.currentTimeMillis()
-    val workload = Workloads(workloadName, spark, dataDir, seed)
+    val queries = args.getOrElse("queries", "").split(",").filter(_.nonEmpty).toSeq
+    val workload = Workloads(workloadName, spark, dataDir, queries, seed)
     val inputMs = System.currentTimeMillis()
     val rng = new Random(seed)
 
     // warm-up: untimed passes at the measured scale
-    val scanRows = mutable.Map.empty[String, Double]
-    (1 to workload.warmupPasses).foreach { _ =>
-      rng.shuffle(workload.ops).foreach { op =>
-        val s = runOp(spark, op, -1, Some(tracer))
-        scanRows(op.name) = s.layers.getOrElse("sources.rows", 0.0)
-      }
-    }
+    val cold = (1 to workload.warmupPasses).flatMap { w =>
+      rng.shuffle(workload.ops).map(op => runOp(spark, op, -w, Some(tracer)))
+    }.filter(_.pass == -1)
     if (!trace) {
       sc.removeSparkListener(tracer)
       spark.listenerManager.unregister(tracer)
     }
-    val rowsPerPass = workload.inputRows.map(_.toDouble).getOrElse(scanRows.values.sum)
+    // input rows of a pass: the amplified input, or the stored row counts of
+    // the tables each query reads; neither depends on how the program plans
+    val tableRows = args.getOrElse("table-rows", "").split(",").filter(_.nonEmpty).map { kv =>
+      val Array(t, n) = kv.split("=", 2)
+      t -> n.toDouble
+    }.toMap
+    val rowsPerPass = workload.inputRows.map(_.toDouble)
+      .getOrElse(cold.map(_.tables.toSeq.map(tableRows).sum).sum)
 
     val firstOpMs = System.currentTimeMillis()
     val samples = mutable.ArrayBuffer.empty[Sample]
     var pass = 0
     val start = System.nanoTime()
     def elapsed = (System.nanoTime() - start) / 1e9
-    while (pass < minPasses || elapsed < seconds) {
+    while (pass < 2 || elapsed < seconds) {
       rng.shuffle(workload.ops).foreach { op =>
         samples += runOp(spark, op, pass, if (trace) Some(tracer) else None)
       }
@@ -114,7 +120,7 @@ object Harness {
       "session_s" -> (sessionMs - launchMs) / 1e3,
       "input_s" -> (inputMs - sessionMs) / 1e3,
       "warmup_s" -> (firstOpMs - inputMs) / 1e3)
-    val report = Report(workloadName, seed, trace, setup, rowsPerPass, samples.toSeq,
+    val report = Report(workloadName, seed, trace, setup, rowsPerPass, samples.toSeq, cold,
       mismatches.map(s => s.op -> s.error.getOrElse(
         s"output ${s.fingerprint.map(_.render).getOrElse("-")} != " +
           want(opsByName(s.op)).getOrElse("no reference"))).toSeq)
@@ -158,6 +164,7 @@ object Harness {
     tracer.foreach { t => Tracer.drain(sc); t.swap() }
     val spans = new Spans
     var rows: Array[Row] = null
+    var df: DataFrame = null
     var columns: Seq[String] = Nil
     var error: Option[String] = None
     val startMs = System.currentTimeMillis()
@@ -166,7 +173,7 @@ object Harness {
     var t1, t2 = t0
     try {
       sc.setLocalProperty(Tracer.Phase, "build")
-      val df = op.build(spark, spans)
+      df = op.build(spark, spans)
       t1 = System.nanoTime()
       sc.setLocalProperty(Tracer.Phase, "plan")
       df.queryExecution.executedPlan
@@ -182,6 +189,13 @@ object Harness {
     val endMs = System.currentTimeMillis()
     if (t1 == t0) t1 = t3
     if (t2 == t0) t2 = t3
+    // the parquet tables the query reads, from its analyzed plan
+    val tables = Option(df).toSeq.flatMap(_.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation
+    }).flatMap {
+      case h: HadoopFsRelation => h.location.rootPaths.map(_.getName.stripSuffix(".parquet"))
+      case _                   => Nil
+    }.toSet
 
     // what the operation left persisted: count it, then release only that
     val info = sc.getRDDStorageInfo
@@ -228,7 +242,7 @@ object Harness {
 
     Sample(op.name, pass, (t3 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
       (cpu1 - cpu0) / 1e9, leaked.length, leaked.map(r => r.memSize + r.diskSize).sum / Tracer.Mb,
-      heldMb, spans.sums.toMap, layers, fingerprint, error)
+      heldMb, spans.sums.toMap, layers, tables, fingerprint, error)
   }
 
   /** Stored fingerprints, one `operation<TAB>fingerprint` per line. */

@@ -3,9 +3,10 @@ package perfbench
 import perfbench.Harness.Sample
 
 /** Turns a run's samples into the end-to-end metrics (untraced run) or the
-  * per-layer metrics (traced run), plus a per-operation breakdown. Every
-  * per-pass figure is a sum over the pass's operations; the reported value
-  * is the median over the timed passes. */
+  * per-layer metrics (traced run), plus a per-operation breakdown that
+  * also holds each operation's counters from the first warm-up pass
+  * (`cold`). Every per-pass figure is a sum over the pass's operations; the
+  * reported value is the median over the timed passes. */
 final case class Report(
     workload: String,
     seed: Long,
@@ -13,6 +14,7 @@ final case class Report(
     setup: Seq[(String, Double)],
     rowsPerPass: Double,
     samples: Seq[Sample],
+    cold: Seq[Sample],
     failures: Seq[(String, String)]
 ) {
   import Report._
@@ -75,6 +77,10 @@ final case class Report(
     }.mkString("{", ", ", "}")
     val ops = samples.groupBy(_.op).toSeq.sortBy(_._1).map { case (op, ss) =>
       val layerKeys = ss.flatMap(_.layers.keys).distinct
+      val coldJson = cold.find(_.op == op).map { c =>
+        (("leaked_rdds" -> num(c.leakedRdds)) +: c.layers.toSeq.map { case (k, v) => k -> num(v) })
+          .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
+      }.getOrElse("{}")
       val fields = Seq(
         "runs" -> ss.size.toString,
         "latency_s" -> num(median(ss.map(_.latencyS))),
@@ -84,13 +90,15 @@ final case class Report(
         "cpu_s" -> num(median(ss.map(_.cpuS))),
         "leaked_rdds" -> ss.map(_.leakedRdds).mkString("[", ",", "]"),
         "leaked_mb" -> num(median(ss.map(_.leakedMb))),
-        "fingerprints" -> ss.flatMap(_.fingerprint.map(_.render)).distinct.map(q).mkString("[", ",", "]")
+        "fingerprints" -> ss.flatMap(_.fingerprint.map(_.render)).distinct.map(q).mkString("[", ",", "]"),
+        "cold" -> coldJson
       ) ++ layerKeys.map(k => k -> ss.map(s => num(s.layers.getOrElse(k, 0.0))).mkString("[", ",", "]"))
       q(op) + ": " + fields.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
     }.mkString("{", ", ", "}")
     val fails = failures.map { case (k, v) => s"[${q(k)}, ${q(v)}]" }.mkString("[", ", ", "]")
     val setupJson = setup.map { case (k, v) => s"${q(k)}: ${num(v)}" }.mkString("{", ", ", "}")
     s"""{"workload": ${q(workload)}, "seed": $seed, "trace": $trace, "passes": ${passes.size}, """ +
+      s""""rows_per_pass": ${num(rowsPerPass)}, """ +
       s""""pass_s": ${num(passS)}, "passes_s": ${passes.map(ss => num(ss.map(_.latencyS).sum)).mkString("[", ", ", "]")}, """ +
       s""""setup": $setupJson, """ +
       s""""attempted": ${samples.size}, "failed": ${failures.size}, """ +

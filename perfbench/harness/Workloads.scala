@@ -35,29 +35,18 @@ final case class Workload(
 )
 
 object Workloads {
-  val Names: Seq[String] = Seq("cohort-tail", "curate-10x")
-
-  /** One query per module of the paper's reference surface (cohort, top-N,
-    * privacy, wrangling, date DSL, tables) plus the TPC-H pricing scan.
-    * The list is kept short so that several warm-up and timed passes fit
-    * one run: a fresh JVM's first pass over the 44 reference and TPC-H
-    * queries takes about a minute. */
-  val CohortTail: Seq[String] = Seq(
-    "q_inclusion", "q_first_row", "q_redact_string", "q_clean_names",
-    "q_date_dsl", "q_archive_retention", "q1_pricing"
-  )
-
   /** Candidate hot documents for `curate-10x`; the seed picks one. */
   val HotDocs: Seq[Long] = Seq(0L, 1L, 2L, 3L)
 
   /** Pass times keep falling for several passes after JVM start (JIT
     * compilation), so each workload warms up until its passes settle:
     * cohort-tail's short queries take about eight passes, the pipelines
-    * three. */
-  def apply(name: String, spark: SparkSession, dir: String, seed: Long): Workload =
+    * three. `queries` names the `SparkEntry` queries of `cohort-tail`. */
+  def apply(name: String, spark: SparkSession, dir: String, queries: Seq[String],
+      seed: Long): Workload =
     name match {
       case "cohort-tail" =>
-        val ops = CohortTail.map(q => Op(q, (s, _) => SparkEntry.queries(q)(s, dir), oracle = true))
+        val ops = queries.map(q => Op(q, (s, _) => SparkEntry.queries(q)(s, dir), oracle = true))
         Workload(ops, warmupPasses = 8)
       case "curate-10x" => curate(spark, dir, HotDocs(Math.floorMod(seed, HotDocs.size.toLong).toInt))
       case other => throw new IllegalArgumentException(s"unknown workload $other")

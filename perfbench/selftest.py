@@ -2,12 +2,16 @@
 """Self-test of the benchmark at sf0.001.
 
 For every workload: one untraced and one traced run of two timed passes.
-Checks that each metric named in BENCHMARK.json is emitted, that every
-output matched its reference, and that each operation does the same work in
-both passes (jobs within the AQE re-plan jitter of 3; when the job count
-repeats, tasks, shuffle bytes and block puts repeat too). The second pass
-doing less work than the first would mean it was served from a cache the
-first one left behind.
+Checks that each metric named in BENCHMARK.json is emitted and that every
+output matched its reference. It also checks that no timed operation was
+served from a cache: every timed pass of an operation must do the work of
+its first warm-up pass, which runs cold in a fresh JVM: jobs within the AQE
+re-plan jitter of 3, and tasks, shuffle bytes and block puts within 10%, or
+within 50% in a pass whose job count moved (one re-planned job at sf0.001
+re-runs an exchange of up to 40% of curate_text's shuffle bytes). If the
+harness stopped releasing what an operation leaves persisted, the later
+passes would read it back and do less: fewer jobs and no block puts. Finally, curate_text must still
+report the Dedup leak it is known to have.
 
 Usage (from the repository root): python3 perfbench/selftest.py [workload ...]
 """
@@ -21,12 +25,18 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 SPEC = json.loads((ROOT / "BENCHMARK.json").read_text())
 JOB_JITTER = 3
-REPEAT = ["exec.tasks", "shuffle.write_mb", "shuffle.read_mb", "materialize.put_mb"]
+# relative tolerance of the counters that must repeat, in a pass with the
+# cold pass's job count and in one whose job count moved
+TOLERANCE = (0.10, 0.50)
+# absolute floor of each counter's tolerance
+REPEAT = {"exec.tasks": 4, "shuffle.write_mb": 0.05, "shuffle.read_mb": 0.05,
+          "materialize.put_mb": 0.05}
+LEAKING = ["curate_text"]
 
 
 def run(workload: str, trace: int) -> tuple:
     cmd = [sys.executable, str(HERE / "run.py"), "--workload", workload, "--seed", "7",
-           "--seconds", "0", "--trace", str(trace), "--sf", "0.001", "--min-passes", "2"]
+           "--seconds", "0", "--trace", str(trace), "--sf", "0.001"]
     out = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=900)
     if out.returncode != 0:
         raise AssertionError(f"{workload} trace={trace} exited {out.returncode}:\n{out.stderr[-2000:]}")
@@ -34,10 +44,6 @@ def run(workload: str, trace: int) -> tuple:
     build = ROOT / os.environ.get("CARGO_TARGET_DIR", ".bench_build")
     detail = json.loads((build / "results" / f"{workload}-seed7-trace{trace}.json").read_text())
     return last, detail
-
-
-def close(a: float, b: float) -> bool:
-    return abs(a - b) <= 0.01 * max(abs(a), abs(b)) + 1e-6
 
 
 def check(workload: str) -> list:
@@ -52,13 +58,21 @@ def check(workload: str) -> list:
         if trace == 0:
             continue
         for op, rec in detail["ops"].items():
+            cold = rec["cold"]
+            if not cold:
+                problems.append(f"{op}: no cold record")
+                continue
+            cold_jobs = cold["queries.build_jobs"] + cold["exec.jobs"]
             jobs = [b + e for b, e in zip(rec["queries.build_jobs"], rec["exec.jobs"])]
-            if max(jobs) - min(jobs) > JOB_JITTER:
-                problems.append(f"{op}: jobs per pass {jobs}")
-            elif len(set(jobs)) == 1:
-                for k in REPEAT:
-                    if not all(close(v, rec[k][0]) for v in rec[k]):
-                        problems.append(f"{op}: {k} per pass {rec[k]}")
+            if any(abs(j - cold_jobs) > JOB_JITTER for j in jobs):
+                problems.append(f"{op}: jobs per pass {jobs}, cold {cold_jobs}")
+            for k, floor in REPEAT.items():
+                if any(abs(v - cold[k]) > max(TOLERANCE[j != cold_jobs] * cold[k], floor)
+                       for j, v in zip(jobs, rec[k])):
+                    problems.append(f"{op}: {k} per pass {rec[k]}, jobs {jobs}, cold {cold[k]}")
+            if op in LEAKING and not (cold["leaked_rdds"] > 0 and all(rec["leaked_rdds"])):
+                problems.append(f"{op}: leak not reported: cold {cold['leaked_rdds']}, "
+                                f"per pass {rec['leaked_rdds']}")
     return problems
 
 
