@@ -16,6 +16,26 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
+  /** The local session of the command-line mains (Bench, Verify,
+    * ExplainDump, ScaleData): `local[N]` with N = `SPARK_GRAFT_CPUS`
+    * (default 4) and as many shuffle partitions, UI off, UTC. ANSI is off
+    * because the reference semantics (PySpark 3.5) assume legacy casting;
+    * events.parquet stores TIMESTAMP(NANOS), which Spark rejects by
+    * default, so it is read as long and converted in the loader. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

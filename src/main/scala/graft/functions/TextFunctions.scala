@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * Hashing is md5-hex over seeded strings — deliberately engine-portable
   * (identical in DuckDB/Trino/Spark) so MinHash signatures and fingerprints
   * can be oracle-checked bit-for-bit. md5 hex is ASCII, so lexicographic
-  * `array_min` ordering agrees across engines too. For throughput-critical
-  * paths where portability doesn't matter, `xxhash64`-based variants are
-  * provided (one 64-bit hash per shingle vs a 128-bit digest).
+  * `array_min` ordering agrees across engines too. The hot digests run as
+  * native codegen'd expressions (graft.plans), where md5 measured no slower
+  * than a non-portable xxhash64 (PERFORMANCE.md, round 6).
   */
 object TextFunctions {
 
@@ -93,35 +93,6 @@ object TextFunctions {
       }
     )
 
-  /** MinHash signature from precomputed (a, b) seeds: component j =
-    * min over shingles of (a + j*b) mod p — classic universal hashing.
-    * Returns array<bigint> of length numHashes. */
-  def minHashSignatureFromPre(preCol: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      j =>
-        array_min(
-          transform(
-            preCol,
-            p => (p.getField("a") + j.cast("long") * p.getField("b")) % MinHashMod
-          )
-        )
-    )
-
-  /** Portable MinHash signature (convenience composition — prefer computing
-    * [[minHashPre]] in its own column when the signature feeds several
-    * consumers). */
-  def minHashSignature(shinglesCol: Column, numHashes: Int): Column =
-    minHashSignatureFromPre(minHashPre(shinglesCol), numHashes)
-
-  /** Fast MinHash signature via xxhash64 (array<bigint>). NOT portable to
-    * the DuckDB oracle — use for production-scale runs. */
-  def minHashSignatureFast(shinglesCol: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      j => array_min(transform(shinglesCol, s => xxhash64(j, s)))
-    )
-
   /** LSH band keys: band b = 60-bit md5 digest prefix of the b-th r-sized
     * slice of the signature (any element-type signature; elements joined
     * with '|'). Two documents share a band key iff that signature slice is
@@ -156,17 +127,24 @@ object TextFunctions {
     ).cast("double") / size(sigA)
 
   /** 64-bit SimHash over tokens: bit b of the result is set iff the sum of
-    * (+1/-1) votes from each token's xxhash64 bit b is positive.
-    * Near-duplicate texts differ in few bits (compare via hamming).
+    * (+1/-1) votes from each token's hash bit b is positive. A token's 64
+    * hash bits are its md5 digest's first 32-bit half (bits 0-31) and second
+    * 32-bit half (bits 32-63) — identical in DuckDB. Near-duplicate texts
+    * differ in few bits (compare via hamming).
     *
     * This nested-HOF form is the executable SPEC (interpreted per lambda —
     * do not put it in a hot path); production corpus runs use
     * `Dedup.simHashSignatures`, an explode -> codegen'd bit-vote aggregate
     * asserted bit-identical to this form. */
   def simHash(tokensCol: Column): Column = {
+    def half(h: Column, from: Int): Column =
+      conv(substring(h, from, 8), 16, 10).cast("long")
     // votes: per bit, fold +1/-1 across token hashes
     val bitVotes = aggregate(
-      transform(tokensCol, t => xxhash64(t)),
+      transform(tokensCol, t => {
+        val h = md5(t)
+        half(h, 1).bitwiseOR(shiftleft(half(h, 9), 32))
+      }),
       array_repeat(lit(0), 64),
       (acc, h) =>
         zip_with(

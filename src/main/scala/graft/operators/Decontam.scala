@@ -270,8 +270,7 @@ object Decontam {
       threshold: Double = 0.8,
       shingleK: Int = 1,
       numHashes: Int = 16,
-      bands: Int = 4,
-      portable: Boolean = true
+      bands: Int = 4
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
@@ -281,10 +280,10 @@ object Decontam {
     // shingle+digest pass three times (the dedupNearMinHash persist
     // discipline, lazy here because no driver action follows)
     val trainSigs =
-      Dedup.minHashSignatures(train, idCol, textCol, shingleK, numHashes, portable)
+      Dedup.minHashSignatures(train, idCol, textCol, shingleK, numHashes)
         .localCheckpoint(false)
     val evalSigs =
-      Dedup.minHashSignatures(eval_, evalIdCol, evalTextCol, shingleK, numHashes, portable)
+      Dedup.minHashSignatures(eval_, evalIdCol, evalTextCol, shingleK, numHashes)
         .localCheckpoint(false)
 
     // (a) identical signatures: est = 1.0, matched to the min eval id per
@@ -332,12 +331,11 @@ object Decontam {
       threshold: Double = 0.8,
       shingleK: Int = 1,
       numHashes: Int = 16,
-      bands: Int = 4,
-      portable: Boolean = true
+      bands: Int = 4
   ): DataFrame = {
     val matched = fuzzyContaminationMatches(
       train, idCol, textCol, eval_, evalIdCol, evalTextCol,
-      threshold, shingleK, numHashes, bands, portable
+      threshold, shingleK, numHashes, bands
     ).select(col("id").as("__loser")).distinct()
     train.join(matched, train(idCol) === col("__loser"), "left_anti")
   }

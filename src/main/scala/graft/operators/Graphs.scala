@@ -33,6 +33,10 @@ object Graphs {
     * so the convergence checksum is the action that materializes it — the
     * round's label update and its convergence check ride the same job
     * instead of a checkpoint job followed by a separate aggregate job.
+    *
+    * Throws `IllegalStateException` when `maxIterations` rounds pass
+    * without reaching the fixpoint, instead of returning unconverged
+    * labels.
     */
   def connectedComponentsByMinLabel(
       edges: DataFrame,
@@ -103,8 +107,11 @@ object Graphs {
       labels = updated
       i += 1
     }
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] rounds=$i converged=$converged")
+    if (!converged)
+      throw new IllegalStateException(
+        s"connected components did not converge in $i rounds " +
+          "(maxIterations): the labels are not final"
+      )
     labels
   }
 

@@ -1210,30 +1210,26 @@ object TextAnalysis {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      spanTokens: Int = 8,
-      portable: Boolean = true
+      spanTokens: Int = 8
   ): DataFrame = {
     require(spanTokens >= 2, "spanTokens must be >= 2")
     val base = df
       .filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"), tokens(col(textCol)).as("__toks"))
 
-    // One row per gram occurrence: (__id, __gpos 0-based, __gh digest —
-    // md5 when portable for the DuckDB oracle, xxhash64 on the fast path;
-    // gram identity is exact-match either way, so results agree modulo
-    // astronomically-unlikely hash collisions).
+    // One row per gram occurrence: (__id, __gpos 0-based, __gh md5 hex
+    // digest, as the DuckDB oracle computes it).
     // Docs shorter than spanTokens emit no grams (sequence(0, n-L) would run
     // BACKWARDS for n < L — Spark sequences descend when end < start).
     // single codegen'd loop (graft.plans.GramHashesExpr) — bit-identical
-    // to transform(sequence(0, n-L), i => digest(array_join(slice)))
-    // (ScaleSpec parity, both hash modes), which ran an interpreted
+    // to transform(sequence(0, n-L), i => md5(array_join(slice)))
+    // (ScaleSpec parity), which ran an interpreted
     // slice + join + digest per POSITION
     def gramHashes(toks: Column): Column =
       org.apache.spark.sql.GraftSqlBridge.column(
         graft.plans.GramHashesExpr(
           org.apache.spark.sql.GraftSqlBridge.expression(toks),
-          spanTokens,
-          portable
+          spanTokens
         )
       )
     val occ = base
@@ -1736,14 +1732,15 @@ object TextAnalysis {
     concat(toks, bigrams)
   }
 
-  /** Bucket of one gram. Callers explode [[rawGrams]] FIRST and apply this
-    * to the exploded column so the digest runs in a codegen'd projection,
-    * not interpreted per array element inside a HOF lambda. */
-  private def bucketOf(g: Column, numBuckets: Int, portable: Boolean): Column =
-    // portable: md5 (engine-reproducible, DuckDB-matchable); fast path:
-    // xxhash64 — no hex round-trip, same quality, different assignment
-    if (portable) graft.functions.TextFunctions.md5Prefix60(g) % numBuckets
-    else pmod(xxhash64(g), lit(numBuckets.toLong))
+  /** Bucket in [0, numBuckets) of one gram or token: its md5's 60-bit
+    * prefix modulo `numBuckets` — the hashing-trick feature map of DSIR and
+    * the token classifier. Engine-portable (DuckDB:
+    * `CAST('0x'||substr(md5(g),1,15) AS BIGINT) % numBuckets`). Callers
+    * explode FIRST and apply this to the exploded column so the digest runs
+    * in a codegen'd projection, not interpreted per array element inside a
+    * HOF lambda. */
+  private def bucketOf(g: Column, numBuckets: Int): Column =
+    graft.functions.TextFunctions.md5Prefix60(g) % numBuckets
 
   /** DSIR importance weights — Data Selection via Importance Resampling
     * (Xie et al., NeurIPS 2023): score every corpus document by how much
@@ -1754,8 +1751,7 @@ object TextAnalysis {
     *     count_b(x) * (ln p_b - ln q_b)
     *
     * with p/q the Laplace-smoothed bucket-frequency models of `target` and
-    * `corpus` (unigrams + bigrams, hashed into `numBuckets` — md5 when
-    * `portable`, xxhash64 on the fast path). Feed the
+    * `corpus` (unigrams + bigrams, md5-hashed into `numBuckets`). Feed the
     * output into [[dsirResample]] (or any weighted sampler) to select
     * corpus data that "looks like" a small high-quality target set — the
     * standard pretraining-data selection recipe.
@@ -1780,8 +1776,7 @@ object TextAnalysis {
       idCol: String,
       textCol: String,
       numBuckets: Int = 8192,
-      smoothing: Double = 1.0,
-      portable: Boolean = true
+      smoothing: Double = 1.0
   ): DataFrame = {
     require(numBuckets >= 2, "numBuckets must be >= 2")
     require(smoothing > 0, "smoothing must be > 0")
@@ -1791,7 +1786,7 @@ object TextAnalysis {
     def buckets(df: DataFrame) = df
       .filter(col(textCol).isNotNull)
       .select(explode(rawGrams(textCol)).as("__g"))
-      .select(bucketOf(col("__g"), numBuckets, portable).as("__b"))
+      .select(bucketOf(col("__g"), numBuckets).as("__b"))
     // featurize the corpus ONCE: per-doc bucket counts feed both the
     // corpus-level counts (sum over docs) and the final per-doc scoring —
     // the shared (id, bucket) shuffle is reused (ReuseExchange at runtime,
@@ -1801,7 +1796,7 @@ object TextAnalysis {
     val docBuckets = ScanUtils.withScanParallelism(corpus)
       .filter(col(textCol).isNotNull)
       .select(col(idCol), explode(rawGrams(textCol)).as("__g"))
-      .select(col(idCol), bucketOf(col("__g"), numBuckets, portable).as("__b"))
+      .select(col(idCol), bucketOf(col("__g"), numBuckets).as("__b"))
       .groupBy(col(idCol), col("__b"))
       .agg(count(lit(1)).as("__c"))
     val qCounts = docBuckets.groupBy("__b").agg(sum("__c").as("__qc"))
@@ -1860,13 +1855,12 @@ object TextAnalysis {
       k: Int,
       numBuckets: Int = 8192,
       smoothing: Double = 1.0,
-      salt: String = "",
-      portable: Boolean = true
+      salt: String = ""
   ): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val u = (Splits.hashBucket(col(idCol), salt).cast("double") + lit(0.5)) /
       lit(Splits.Buckets.toDouble)
-    dsirLogWeights(corpus, target, idCol, textCol, numBuckets, smoothing, portable)
+    dsirLogWeights(corpus, target, idCol, textCol, numBuckets, smoothing)
       .withColumn(
         "sample_key",
         round(log(log(lit(1.0) / u)), 6) - col("log_weight")
@@ -1874,18 +1868,6 @@ object TextAnalysis {
       .orderBy(col("sample_key"), col(idCol))
       .limit(k)
   }
-
-  /** Bucket in [0, numBuckets) from the token's md5 — the hashing-trick
-    * feature map. Pure per-row expression, engine-portable (DuckDB:
-    * `CAST('0x'||substr(md5(tok),1,15) AS BIGINT) % numBuckets`). */
-  private def tokenBucket(
-      tok: Column,
-      numBuckets: Int,
-      portable: Boolean = true
-  ): Column =
-    if (portable)
-      conv(substring(md5(tok), 1, 15), 16, 10).cast("long") % numBuckets
-    else pmod(xxhash64(tok), lit(numBuckets.toLong))
 
   /** Train a hashed Naive-Bayes token classifier: the classic
     * "wiki-vs-crawl" quality filter (GPT-3 appendix A / CCNet-style) —
@@ -1895,8 +1877,7 @@ object TextAnalysis {
     * Returns the full model as a DataFrame (bucket, weight) with one row
     * per bucket (unseen buckets carry the smoothing-only weight), weights
     * rounded to 6 decimals so the model is engine-portable and scoring is
-    * reproducible. `portable = false` buckets by xxhash64 instead of md5
-    * (faster; train and score MUST use the same setting).
+    * reproducible.
     *
     * Scale shape: each side is one explode -> hash aggregate down to at
     * most D rows (map-side combine absorbs repeats); totals ride one-row
@@ -1910,14 +1891,13 @@ object TextAnalysis {
       positive: DataFrame,
       negative: DataFrame,
       textCol: String,
-      numBuckets: Int = 4096,
-      portable: Boolean = true
+      numBuckets: Int = 4096
   ): DataFrame = {
     require(numBuckets >= 2, "numBuckets must be >= 2")
     def bucketCounts(df: DataFrame, cnt: String): DataFrame = df
       .filter(col(textCol).isNotNull)
       .select(explode(tokens(col(textCol))).as("__tok"))
-      .select(tokenBucket(col("__tok"), numBuckets, portable).as("bucket"))
+      .select(bucketOf(col("__tok"), numBuckets).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as(cnt))
       .localCheckpoint(false)
@@ -1969,12 +1949,11 @@ object TextAnalysis {
       textCol: String,
       model: DataFrame,
       numBuckets: Int = 4096,
-      prior: Double = 0.0,
-      portable: Boolean = true
+      prior: Double = 0.0
   ): DataFrame =
     df.filter(col(textCol).isNotNull)
       .select(col(idCol), explode(tokens(col(textCol))).as("__tok"))
-      .select(col(idCol), tokenBucket(col("__tok"), numBuckets, portable).as("bucket"))
+      .select(col(idCol), bucketOf(col("__tok"), numBuckets).as("bucket"))
       .join(broadcast(model), Seq("bucket"))
       .groupBy(col(idCol))
       .agg(

@@ -26,9 +26,6 @@ object TimeUtils {
     * TIMESTAMP inputs (Catalyst's SimplifyCasts removes the cast). */
   def asInstant(c: Column): Column = c.cast(TimestampType)
 
-  /** Microseconds since epoch for any supported event-time column type. */
-  def instantMicros(c: Column): Column = unix_micros(asInstant(c))
-
   /** Normalize the named event-time columns of `df` to TIMESTAMP at
     * operator entry. Unsupported types fail fast with the column NAMED —
     * one clear message instead of a cryptic analysis error rows deep. */

@@ -221,7 +221,7 @@ private[graft] object DedupQueries {
       val docs = t(s, dir, "documents")
       val corpusSigs = Dedup.minHashSignatures(
         docs.filter(col("doc_id") < 250), "doc_id", "text",
-        shingleK = 1, numHashes = 16, portable = true
+        shingleK = 1, numHashes = 16
       )
       Dedup
         .dedupNearMinHashIncremental(
@@ -236,9 +236,8 @@ private[graft] object DedupQueries {
     // q_dedup_incremental, signature store = 8 bytes per corpus doc
     "q_dedup_simhash_incremental" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val corpusSigs = Dedup.simHashSignatures(
-        docs.filter(col("doc_id") < 250), "doc_id", "text", portable = true
-      )
+      val corpusSigs =
+        Dedup.simHashSignatures(docs.filter(col("doc_id") < 250), "doc_id", "text")
       Dedup
         .dedupNearSimHashIncremental(
           docs.filter(col("doc_id") >= 250), "doc_id", "text",

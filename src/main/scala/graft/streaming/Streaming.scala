@@ -247,12 +247,11 @@ object Streaming {
       threshold: Double = 0.9,
       shingleK: Int = 1,
       numHashes: Int = 16,
-      bands: Int = 4,
-      portable: Boolean = true
+      bands: Int = 4
   )(sink: DataFrame => Unit): Unit = {
     import graft.operators.Dedup
     var sigStore = Dedup
-      .minHashSignatures(reference, idCol, textCol, shingleK, numHashes, portable)
+      .minHashSignatures(reference, idCol, textCol, shingleK, numHashes)
       .localCheckpoint()
     val q = docs.writeStream
       .outputMode("append")
@@ -262,13 +261,13 @@ object Streaming {
           val survivors = Dedup
             .dedupNearMinHashIncremental(
               batch, idCol, textCol, sigStore,
-              threshold, shingleK, numHashes, bands, portable
+              threshold, shingleK, numHashes, bands
             )
             .localCheckpoint()
           sigStore = sigStore
             .union(
               Dedup.minHashSignatures(
-                survivors, idCol, textCol, shingleK, numHashes, portable
+                survivors, idCol, textCol, shingleK, numHashes
               )
             )
             .localCheckpoint()
@@ -327,7 +326,6 @@ object Streaming {
       shingleK: Int = 1,
       numHashes: Int = 16,
       bands: Int = 4,
-      portable: Boolean = true,
       checkpointDir: String = ""
   )(sink: DataFrame => Unit): Unit = {
     import graft.operators.Dedup
@@ -343,7 +341,7 @@ object Streaming {
         .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     if (!populated)
       Dedup
-        .minHashSignatures(reference, idCol, textCol, shingleK, numHashes, portable)
+        .minHashSignatures(reference, idCol, textCol, shingleK, numHashes)
         .write.mode("overwrite").parquet(storePath)
     val writer = docs.writeStream
       .outputMode("append")
@@ -357,7 +355,7 @@ object Streaming {
           val survivors = Dedup
             .dedupNearMinHashIncremental(
               batch, idCol, textCol, sigStore,
-              threshold, shingleK, numHashes, bands, portable
+              threshold, shingleK, numHashes, bands
             )
             // materialize BEFORE the store append: the survivors' plan
             // reads storePath, and their signatures are about to land there
@@ -366,7 +364,7 @@ object Streaming {
           // append-first would lose the batch on a crash between the two
           sink(survivors)
           Dedup
-            .minHashSignatures(survivors, idCol, textCol, shingleK, numHashes, portable)
+            .minHashSignatures(survivors, idCol, textCol, shingleK, numHashes)
             .write.mode("append").parquet(storePath)
         }
       }

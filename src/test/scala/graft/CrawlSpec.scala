@@ -1487,7 +1487,7 @@ class CrawlSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val sets = Dedup.verifiedSetTable(docs, "doc_id", "text", 1)
     val p = Dedup
-      .minHashVerifiedPairsPlan(sets, 0.8, 16, 4, portable = true)
+      .minHashVerifiedPairsPlan(sets, 0.8, 16, 4)
       .queryExecution
       .executedPlan
       .toString

@@ -50,15 +50,6 @@ class ScaleSpec extends SparkSpec {
     assert(got.contains(3L) && got.contains(5L))
   }
 
-  test("fast (xxhash64) minhash mode finds the same duplicate pair") {
-    val pairs = Dedup
-      .minHashCandidatePairs(docs, "doc_id", "text", portable = false)
-      .filter(col("est_jaccard") >= 0.9)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.contains((1L, 2L)))
-  }
-
   test("ngramJaccardPairs computes exact token-set jaccard") {
     val pairs = Dedup
       .ngramJaccardPairs(docs, "doc_id", "text", shingleK = 1, threshold = 0.5)
@@ -100,7 +91,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("agg-form simhash (fast mode) is bit-identical to the HOF spec form") {
+  test("agg-form simhash is bit-identical to the HOF spec form") {
     val d = spark.read
       .parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") < 200)
@@ -113,7 +104,7 @@ class ScaleSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
     val agg = Dedup
-      .simHashSignatures(d, "doc_id", "text", portable = false)
+      .simHashSignatures(d, "doc_id", "text")
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
@@ -200,6 +191,17 @@ class ScaleSpec extends SparkSpec {
       .toMap
     assert(comp.size == 129 && comp.values.forall(_ == 1L),
       "default maxIterations must suffice for a 128-diameter chain")
+  }
+
+  test("CC fails loudly when maxIterations runs out before convergence") {
+    // the same 129-vertex chain needs more than 2 rounds: returning the
+    // half-propagated labels would silently split one component
+    val chain = (1L until 129L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException] {
+      graft.operators.Graphs
+        .connectedComponentsByMinLabel(chain, "a", "b", maxIterations = 2)
+    }
+    assert(e.getMessage.contains("2 rounds"), e.getMessage)
   }
 
   test("CC convergence check rides the update job (fewer jobs than an eager-checkpoint loop)") {
@@ -2698,7 +2700,7 @@ class ScaleSpec extends SparkSpec {
       (12L, "novel document about distributed joins a genuinely"), // dup of 11
       (13L, "entirely fresh text mentioning watermarks and state")
     ).toDF("doc_id", "text")
-    val sigs = Dedup.minHashSignatures(corpus, "doc_id", "text", 1, 16, portable = true)
+    val sigs = Dedup.minHashSignatures(corpus, "doc_id", "text", 1, 16)
     val kept = Dedup
       .dedupNearMinHashIncremental(batch, "doc_id", "text", sigs, threshold = 0.9)
       .select("doc_id")
@@ -4030,17 +4032,6 @@ class ScaleSpec extends SparkSpec {
     val codey = (41 to 50).map(i => w(i.toLong))
     assert(codey.min > prose.max,
       s"target-like docs must outscore all prose: ${codey.min} vs ${prose.max}")
-    // the xxhash64 fast path preserves the semantics (different buckets,
-    // same separation) and stays deterministic
-    val wf = TextAnalysis
-      .dsirLogWeights(
-        corpus, target, "doc_id", "text", numBuckets = 1024, portable = false
-      )
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(wf.size == 50)
-    assert((41 to 50).map(i => wf(i.toLong)).min >
-      (1 to 40).map(i => wf(i.toLong)).max,
-      "fast path must preserve the target-vs-prose separation")
     // selection: the 10 code-like docs dominate a k=10 importance sample
     val picked = TextAnalysis
       .dsirResample(corpus, target, "doc_id", "text", k = 10, numBuckets = 1024)
@@ -4262,7 +4253,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("GramHashesExpr matches the composed slice+digest form in both hash modes") {
+  test("GramHashesExpr matches the composed slice+md5 form") {
     import org.apache.spark.sql.GraftSqlBridge
     val rnd = new scala.util.Random(4242)
     val toksCol = split(lower(col("text")), " ")
@@ -4272,25 +4263,23 @@ class ScaleSpec extends SparkSpec {
         .mkString(" ")
     } ++ Seq("", "one two three four five six seven eight nine ten")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    for (k <- Seq(2, 8); portable <- Seq(true, false)) {
-      def hash(g: org.apache.spark.sql.Column) =
-        if (portable) md5(g) else xxhash64(g).cast("string")
+    for (k <- Seq(2, 8)) {
       val composed = when(
         size(toksCol) >= k,
         transform(
           sequence(lit(0), size(toksCol) - k),
-          i => hash(array_join(slice(toksCol, i + 1, lit(k)), " "))
+          i => md5(array_join(slice(toksCol, i + 1, lit(k)), " "))
         )
       ).otherwise(array().cast("array<string>"))
       val native = GraftSqlBridge.column(
-        graft.plans.GramHashesExpr(GraftSqlBridge.expression(toksCol), k, portable)
+        graft.plans.GramHashesExpr(GraftSqlBridge.expression(toksCol), k)
       )
       df.select(col("id"), native.as("n"), composed.as("c"))
         .collect()
         .foreach { r =>
           assert(
             r.getSeq[String](1) == r.getSeq[String](2),
-            s"k=$k portable=$portable id=${r.get(0)}"
+            s"k=$k id=${r.get(0)}"
           )
         }
     }

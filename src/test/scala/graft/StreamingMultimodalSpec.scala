@@ -364,11 +364,11 @@ class StreamingMultimodalSpec extends SparkSpec {
     // ground truth: the same incremental operator applied batch-by-batch
     // with the same growing signature store
     var store = Dedup
-      .minHashSignatures(reference, "doc_id", "text", 1, 16, portable = true)
+      .minHashSignatures(reference, "doc_id", "text", 1, 16)
     val expected = batches.map { b =>
       val surv = Dedup.dedupNearMinHashIncremental(b, "doc_id", "text", store)
       store = store
-        .union(Dedup.minHashSignatures(surv, "doc_id", "text", 1, 16, portable = true))
+        .union(Dedup.minHashSignatures(surv, "doc_id", "text", 1, 16))
         .localCheckpoint()
       surv.select("doc_id").collect().map(_.getLong(0)).toSet
     }
@@ -574,7 +574,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     // would have done next
     Dedup.minHashSignatures(
       docs.filter(col("doc_id").isInCollection(beforeCrash(2))),
-      "doc_id", "text", 1, 16, portable = true
+      "doc_id", "text", 1, 16
     ).write.mode("append").parquet(storePath)
     // restart: the replayed batch collides with its own stored signatures,
     // so the replay must emit NOTHING and admit nothing twice
