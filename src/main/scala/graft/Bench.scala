@@ -106,14 +106,24 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq
       .sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def runSweep(): Map[String, (Double, Option[String])] =
-      ordered.map { case (name, fn) =>
+    // Janino compilations per sweep, aligned with `sweeps`: Spark's codegen
+    // cache holds 100 classes by default, and a sweep that outgrows it
+    // recompiles on every run (file artifact only)
+    def compilations(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var sweepCompilations = Seq.empty[Long]
+    def runSweep(): Map[String, (Double, Option[String])] = {
+      val c0 = compilations()
+      val sweep = ordered.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val err =
           try { materialize(fn(spark, sfDir)); None }
           catch { case e: Throwable => Some(e.getClass.getSimpleName + ": " + e.getMessage) }
         name -> (((System.nanoTime() - t0) / 1e9, err))
       }.toMap
+      sweepCompilations :+= compilations() - c0
+      sweep
+    }
     var sweeps: Seq[Map[String, (Double, Option[String])]] =
       (1 to runs).map(_ => runSweep())
     def deriveResults(sw: Seq[Map[String, (Double, Option[String])]]) =
@@ -154,6 +164,7 @@ object Bench {
         val worst = totalsAll.indexOf(totalsAll.max)
         discardedTotal = totalsAll(worst).toString
         sweeps = all.patch(worst, Nil, 1)
+        sweepCompilations = sweepCompilations.patch(worst, Nil, 1)
         results = deriveResults(sweeps)
         resweeps = 1
       }
@@ -207,7 +218,7 @@ object Bench {
     def pipelineSetup(): (Long, () => Long) = {
       import org.apache.spark.sql.functions.col
       import graft.operators.{Decontam, Dedup, Splits, Stress, TextAnalysis}
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = QueryShared.t(spark, sfDir, "documents")
         .select("doc_id", "text")
       val stressed = Stress
         .selfUnionSkewed(docs, "doc_id", copies = 10, idStride = 1000000L,
@@ -234,7 +245,7 @@ object Bench {
     def semanticSetup(): (Long, () => Long) = {
       import org.apache.spark.sql.functions.col
       import graft.operators.{Dedup, Similarity, Splits, Stress, TopN}
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb = QueryShared.t(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val stressed = Stress
         .selfUnionSkewed(emb, "vec_id", copies = 10, idStride = 1000000L)
@@ -320,7 +331,7 @@ object Bench {
     // the per-query sweep minimums and raw samples (stdout stays compact):
     // on this VM's bursty CPU the min is the truth, the spread is the noise.
     val fileLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,$contentionJson,"queries":$qs,"queries_min":$qsMin,"samples":$sampleMap,"errors":$errs,"ok":${results.count(_._3.isEmpty)},"failed":${results.count(_._3.nonEmpty)},"runs":$runs,"throughput":$throughput,"semantic_throughput":$semThroughput,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,$contentionJson,"sweep_compilations":[${sweepCompilations.mkString(",")}],"queries":$qs,"queries_min":$qsMin,"samples":$sampleMap,"errors":$errs,"ok":${results.count(_._3.isEmpty)},"failed":${results.count(_._3.nonEmpty)},"runs":$runs,"throughput":$throughput,"semantic_throughput":$semThroughput,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     try {
       val w = new java.io.PrintWriter(new java.io.File(outFile), "UTF-8")

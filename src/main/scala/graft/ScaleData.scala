@@ -44,8 +44,7 @@ object ScaleData {
     )
     val spark = SparkEntry.localSession()
 
-    def read(name: String): DataFrame =
-      spark.read.parquet(s"$inDir/$name.parquet")
+    def read(name: String): DataFrame = QueryShared.t(spark, inDir, name)
 
     /** `copies` replicas with `Stride * copy` added to every id column;
       * `extra` can rewrite content columns per copy before the copy tag
@@ -95,11 +94,11 @@ object ScaleData {
     def write(df: DataFrame, name: String, parts: Int = 1): Unit = {
       val out = if (parts > 1) df.repartition(parts) else df
       out.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      println(s"[scaledata] $name: ${spark.read.parquet(s"$outDir/$name.parquet").count()} rows, $parts files")
+      println(s"[scaledata] $name: ${QueryShared.t(spark, outDir, name).count()} rows, $parts files")
     }
 
     def partsFor(name: String): Int =
-      copies * spark.read.parquet(s"$inDir/$name.parquet").rdd.getNumPartitions
+      copies * read(name).rdd.getNumPartitions
 
     write(read("region"), "region")
     write(read("nation"), "nation")

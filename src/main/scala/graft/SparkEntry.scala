@@ -1,5 +1,6 @@
 package graft
 
+import graft.QueryShared.t
 import graft.functions.DateInstructions
 import graft.operators.{Cohort, Privacy, TopN, Wrangling}
 import graft.sources.Tables
@@ -35,9 +36,6 @@ object SparkEntry {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0): cohort filter
     * over orders → join lineitem → per-customer revenue with disclosure

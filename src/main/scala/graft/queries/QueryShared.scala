@@ -1,8 +1,10 @@
 package graft
 
 import graft.operators.{Similarity, TextAnalysis}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Helpers shared by the per-domain query registries: table loaders,
   * cross-registry constants (ANN hyperplanes, Fellegi-Sunter weights)
@@ -10,8 +12,61 @@ import org.apache.spark.sql.functions._
   * fold the SAME Scala-computed constants. */
 private[graft] object QueryShared {
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The one loader of a `$dir/$name.parquet` table (a file or a
+    * Spark-written directory). A bare `spark.read.parquet` infers the
+    * schema with a footer-reading Spark job on every call; here it is
+    * inferred once per file version and later reads supply it, so building
+    * a query lists the files but runs no job. A missing path takes the bare
+    * read, which raises Spark's own error. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    tableSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** What parquet schema inference depends on: every file under the path
+    * with its length and modification time, and the session's parquet
+    * reader settings (`nanosAsLong`, `binaryAsString`, ...). */
+  private final case class FileVersion(
+      files: Seq[(String, Long, Long)],
+      parquetConf: Seq[(String, String)]
+  )
+
+  /** Qualified path -> the version its schema was inferred at. Holds one
+    * `StructType` per path, no data; a new version replaces the old. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (FileVersion, StructType)]()
+
+  private def tableSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed =
+      try {
+        val it = fs.listFiles(hPath, true)
+        val files = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some(files.result().sortBy(_._1))
+      } catch { case _: java.io.FileNotFoundException => None }
+    listed.map { files =>
+      val key = fs.makeQualified(hPath).toString
+      val parquetConf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted
+      val version = FileVersion(files, parquetConf)
+      // look up, infer on a miss, then put: inference runs a Spark job, so
+      // it stays outside the map's lock
+      Option(schemas.get(key)).collect { case (v, s) if v == version => s }.getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(key, (version, inferred))
+        inferred
+      }
+    }
+  }
 
   /** The driver has shipped events.parquet under several timestamp
     * physical types across regenerations — TIMESTAMP(NANOS) (arrives as
