@@ -225,24 +225,6 @@ object Decontam {
     }
   }
 
-  /** SEMANTIC contamination report: per training document, the maximum
-    * cosine similarity of its embedding to ANY evaluation embedding, plus
-    * a `contaminated` flag at `threshold` — the paraphrase-robust
-    * complement of the n-gram forms above (a reworded benchmark question
-    * shares no 13-gram but sits at cosine ~0.9+; see the decontamination
-    * discussions in the GPT-3 and Llama 2 reports). Documents with a NULL
-    * embedding get NULL similarity and are never flagged.
-    *
-    * Exactness: per-pair cosine is the codegen'd native expression; max()
-    * over doubles is order-independent (unlike sums), so ONE rounding of
-    * the final maximum keeps the report engine-reproducible.
-    *
-    * Scale shape: the eval side is small by construction (same contract
-    * as [[contaminationReport]]) and BROADCAST; the corpus streams once
-    * through a broadcast nested-loop score + per-doc max with map-side
-    * partial aggregation. Nothing corpus-sized shuffles; for eval sets
-    * too large to broadcast, pre-bucket both sides with
-    * `Similarity.annTopKMultiBand`'s banks instead. */
   /** Fuzzy (near-duplicate) contamination matches: training docs whose
     * MinHash signature near-matches an eval doc — the rung between exact
     * n-gram decontamination (verbatim leakage) and embedding-based
@@ -251,10 +233,11 @@ object Decontam {
     * most of their token set. One row per (train id, matched eval id)
     * with the estimated Jaccard (1.0 for identical signatures).
     *
-    * Same candidate model as [[Dedup.dedupNearMinHashIncremental]]'s
-    * corpus passes — (a) identical signature: certain match; (b) per LSH
-    * band bucket, the train doc pairs with the MINIMUM-id eval doc
-    * sharing it, kept when full-signature agreement >= `threshold` — but
+    * The candidate model is [[Dedup.minHashReferenceMatches]], shared with
+    * [[Dedup.dedupNearMinHashIncremental]]'s corpus passes — (a) identical
+    * signature: certain match with the minimum eval id of that signature;
+    * (b) per LSH band bucket, the train doc pairs with the MINIMUM-id eval
+    * doc sharing it, kept when full-signature agreement >= `threshold` —
     * WITHOUT the in-batch passes (decontamination never dedups the corpus
     * against itself). The eval side is benchmark-sized; its signature and
     * band tables are broadcastable, and the corpus is scanned exactly
@@ -272,8 +255,6 @@ object Decontam {
       numHashes: Int = 16,
       bands: Int = 4
   ): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
     // both signature tables feed THREE divergently-shaped consumers (the
     // exact-signature join, the band explode, and the verify join-back),
     // so each is lazily materialized — without it the corpus pays the
@@ -285,38 +266,10 @@ object Decontam {
     val evalSigs =
       Dedup.minHashSignatures(eval_, evalIdCol, evalTextCol, shingleK, numHashes)
         .localCheckpoint(false)
-
-    // (a) identical signatures: est = 1.0, matched to the min eval id per
-    // signature group (deterministic, one row per train doc per signature)
-    val evalSigMins = evalSigs.groupBy("__sig").agg(min("__id").as("eval_id"))
-    val exact = trainSigs
-      .join(evalSigMins, Seq("__sig"))
-      .select(col("__id").as("id"), col("eval_id"), lit(1.0).as("est_jaccard"))
-
-    // (b) banded: train bands meet the bucket-minimum eval doc per band
-    def banded(sigs: DataFrame): DataFrame =
-      sigs.select(
-        col("__id"),
-        explode(lshBands(col("__sig"), bands, r)).as("__band")
-      )
-    val evalMins = banded(evalSigs).groupBy("__band").agg(min("__id").as("eval_id"))
-    val near = banded(trainSigs)
-      .join(evalMins, Seq("__band"))
-      .select("__id", "eval_id")
+    Dedup
+      .minHashReferenceMatches(trainSigs, evalSigs, threshold, numHashes, bands)
+      .select(col("id"), col("ref_id").as("eval_id"), col("est_jaccard"))
       .distinct()
-      .join(trainSigs, Seq("__id"))
-      .join(
-        evalSigs.select(col("__id").as("eval_id"), col("__sig").as("__esig")),
-        Seq("eval_id")
-      )
-      .filter(minHashSimilarity(col("__sig"), col("__esig")) >= threshold)
-      .select(
-        col("__id").as("id"),
-        col("eval_id"),
-        minHashSimilarity(col("__sig"), col("__esig")).as("est_jaccard")
-      )
-
-    exact.union(near).distinct()
   }
 
   /** Drop every training doc with a [[fuzzyContaminationMatches]] row —
@@ -340,6 +293,24 @@ object Decontam {
     train.join(matched, train(idCol) === col("__loser"), "left_anti")
   }
 
+  /** SEMANTIC contamination report: per training document, the maximum
+    * cosine similarity of its embedding to ANY evaluation embedding, plus
+    * a `contaminated` flag at `threshold` — the paraphrase-robust
+    * complement of the n-gram forms above (a reworded benchmark question
+    * shares no 13-gram but sits at cosine ~0.9+; see the decontamination
+    * discussions in the GPT-3 and Llama 2 reports). Documents with a NULL
+    * embedding get NULL similarity and are never flagged.
+    *
+    * Exactness: per-pair cosine is the codegen'd native expression; max()
+    * over doubles is order-independent (unlike sums), so ONE rounding of
+    * the final maximum keeps the report engine-reproducible.
+    *
+    * Scale shape: the eval side is small by construction (same contract
+    * as [[contaminationReport]]) and BROADCAST; the corpus streams once
+    * through a broadcast nested-loop score + per-doc max with map-side
+    * partial aggregation. Nothing corpus-sized shuffles; for eval sets
+    * too large to broadcast, pre-bucket both sides with
+    * `Similarity.annTopKMultiBand`'s banks instead. */
   def semanticContaminationReport(
       train: DataFrame,
       eval: DataFrame,

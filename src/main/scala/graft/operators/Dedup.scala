@@ -4,6 +4,7 @@ import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication for large corpora: exact, MinHash+LSH, SimHash, and exact
   * n-gram Jaccard (north-star extension; no reference counterpart —
@@ -150,29 +151,7 @@ object Dedup {
       col("__id"),
       explode(lshBands(col("__sig"), bands, r)).as("__band")
     )
-
-    val pairs =
-      if (representativesOnly) {
-        // bucket minima via groupBy + join, NOT a window: a window puts a
-        // whole hot bucket in one task (giant duplicate clusters = one huge
-        // band group), while the aggregate combines map-side and the join
-        // on __band stays splittable under AQE skew handling.
-        val mins = banded.groupBy("__band").agg(min("__id").as("__min"))
-        banded
-          .join(mins, Seq("__band"))
-          .filter(col("__id") > col("__min"))
-          .select(col("__min").as("id_a"), col("__id").as("id_b"))
-          .distinct()
-      } else {
-        val a = banded.select(col("__band"), col("__id").as("id_a"))
-        val b = banded.select(col("__band"), col("__id").as("id_b"))
-        a.join(b, Seq("__band"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b")
-          .distinct()
-      }
-
-    pairs
+    bucketPairs(banded, "__band", representativesOnly)
       .join(sigs.select(col("__id").as("id_a"), col("__sig").as("sig_a")), Seq("id_a"))
       .join(sigs.select(col("__id").as("id_b"), col("__sig").as("sig_b")), Seq("id_b"))
       .select(
@@ -180,6 +159,75 @@ object Dedup {
         col("id_b"),
         minHashSimilarity(col("sig_a"), col("sig_b")).as("est_jaccard")
       )
+  }
+
+  /** Pairs each row of an (`__id`, `key`) table with the SMALLEST id sharing
+    * its key, as (id_a = that minimum, id_b = id) for every id above it —
+    * the exact-signature pass and bucket-minimum band pairing of every
+    * near-duplicate operator. A groupBy + join, NOT a window: a window puts
+    * a whole hot key in one task (a giant duplicate cluster is one huge
+    * group), while the aggregate combines map-side and the join stays
+    * splittable under AQE skew handling. */
+  private def groupMinPairs(rows: DataFrame, key: String): DataFrame = {
+    val mins = rows.groupBy(key).agg(min("__id").as("__min"))
+    rows
+      .join(mins, Seq(key))
+      .filter(col("__id") > col("__min"))
+      .select(col("__min").as("id_a"), col("__id").as("id_b"))
+  }
+
+  /** Distinct candidate pairs (id_a < id_b) of an (`__id`, `key`) bucket
+    * table: every in-bucket pair, or with `representativesOnly` only each
+    * row's pair with its bucket minimum ([[groupMinPairs]] — O(buckets)
+    * pairs per row even for a giant cluster). Only ids ride the join;
+    * callers attach signatures or vectors to the deduplicated pairs. */
+  private def bucketPairs(
+      banded: DataFrame,
+      key: String,
+      representativesOnly: Boolean
+  ): DataFrame =
+    if (representativesOnly) groupMinPairs(banded, key).distinct()
+    else {
+      val a = banded.select(col(key), col("__id").as("id_a"))
+      val b = banded.select(col(key), col("__id").as("id_b"))
+      a.join(b, Seq(key))
+        .filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    }
+
+  /** The ids a near-duplicate pair table (id_a < id_b) drops, as
+    * `__loser`: every `id_b`, or with `transitive` every id above the
+    * minimum of its connected component over the pair edges
+    * ([[Graphs.connectedComponentsByMinLabel]] — A~B~C drops both B and C
+    * even when A and C share no direct pair). Not deduplicated. */
+  private def losersFromPairs(pairs: DataFrame, transitive: Boolean): DataFrame =
+    if (transitive)
+      Graphs
+        .connectedComponentsByMinLabel(pairs.select("id_a", "id_b"), "id_a", "id_b")
+        .filter(col("id") > col("component"))
+        .select(col("id").as("__loser"))
+    else pairs.select(col("id_b").as("__loser"))
+
+  /** The EAGER step of the near-duplicate operators: persists `input`
+    * (MEMORY_AND_DISK), builds `result` and materializes it with one
+    * `count()` job, then releases `input` — when that job ends, or fails.
+    * `input` is the table several sub-plans of `result` consume (a
+    * signature or shingle-set table); without the persist the lazy DAG
+    * would re-shingle and re-hash the corpus once per consumer (~5 full
+    * scans at 100 TB). `result` — the skinny loser-id set the caller
+    * anti-joins, or a pair table — stays persisted (MEMORY_AND_DISK,
+    * recomputable, LRU-evictable) and is referenced by the plan the caller
+    * returns; nothing here releases it. Any connected-component pass
+    * inside `result` runs while `input` is held. */
+  private def materialize(input: DataFrame)(result: => DataFrame): DataFrame = {
+    def hold(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+    hold(input)
+    try {
+      val out = hold(result)
+      out.count()
+      out
+    } finally input.unpersist(blocking = false)
   }
 
   /** LSH tuning report: how well does a (numHashes, bands) MinHash config
@@ -298,13 +346,8 @@ object Dedup {
     * have no shingles, so they produce no signature and are always RETAINED
     * (a null document cannot be a near-duplicate of anything).
     *
-    * EAGER: the loser-id set is materialized when the operator is called
-    * (the signature table is consumed by several sub-plans, so it is
-    * persisted for the duration of that one job and released immediately
-    * after — without this the lazy DAG would re-shingle and re-hash the
-    * corpus once per consumer, ~5 full scans at 100 TB). The skinny
-    * loser-id table stays persisted for the returned anti-join;
-    * MEMORY_AND_DISK, recomputable, LRU-evictable.
+    * EAGER: the loser-id set is built off the held signature table when the
+    * operator is called — see [[materialize]].
     */
   def dedupNearMinHash(
       df: DataFrame,
@@ -316,48 +359,35 @@ object Dedup {
       bands: Int = 4,
       transitive: Boolean = false
   ): DataFrame = {
-    // ONE signature computation feeds both passes below (shingle + md5 over
-    // the corpus is the dominant cost at scale — never pay it twice)
+    // ONE signature computation feeds both passes (shingle + md5 over the
+    // corpus is the dominant cost at scale — never pay it twice)
     val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // Pass 1 (exact, linear): rows sharing a FULL signature are certain
-    // dups (est = 1.0) — group by signature, drop everything above the
-    // group minimum. Catches arbitrarily large duplicate clusters without
-    // any pair enumeration. groupBy + join rather than a window so a giant
-    // identical-signature cluster never lands in a single task.
-    val sigMins = sigs.groupBy("__sig").agg(min("__id").as("__min"))
-    val exactLosers = sigs
-      .join(sigMins, Seq("__sig"))
-      .filter(col("__id") > col("__min"))
-      .select(col("__id").as("__loser"))
-
-    // Pass 2 (approximate, linear): bucket-minimum candidate pairs for
-    // near-but-not-identical signatures above the threshold.
-    val nearPairs =
-      minHashCandidatePairsFromSigs(sigs, numHashes, bands, representativesOnly = true)
-        .filter(col("est_jaccard") >= threshold)
-    val nearLosers =
-      if (transitive) {
-        // cluster label = min reachable id over the candidate-pair edges;
-        // everything above its cluster minimum is a loser (A~B~C drops both
-        // B and C even when A and C share no direct pair)
-        Graphs
-          .connectedComponentsByMinLabel(nearPairs.select("id_a", "id_b"), "id_a", "id_b")
-          .filter(col("id") > col("component"))
-          .select(col("id").as("__loser"))
-      } else {
-        nearPairs.select(col("id_b").as("__loser"))
-      }
-
-    val losers = exactLosers
-      .union(nearLosers)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    losers.count() // one pass over the cached signatures builds the loser set
-    sigs.unpersist(blocking = false)
+    val losers = materialize(sigs) {
+      minHashLosers(sigs, threshold, numHashes, bands, transitive).distinct()
+    }
     df.join(losers, df(idCol) === col("__loser"), "left_anti")
   }
+
+  /** The in-table losers of an (`__id`, `__sig`) MinHash signature table:
+    * (1, exact, linear) every id above the minimum of its identical-
+    * signature group — certain dups, no pair enumeration even for giant
+    * clusters; (2, approximate, linear) the [[losersFromPairs]] of the
+    * bucket-minimum candidate pairs at estimated Jaccard >= `threshold`.
+    * Not deduplicated. */
+  private def minHashLosers(
+      sigs: DataFrame,
+      threshold: Double,
+      numHashes: Int,
+      bands: Int,
+      transitive: Boolean
+  ): DataFrame =
+    losersFromPairs(groupMinPairs(sigs, "__sig"), transitive = false).union(
+      losersFromPairs(
+        minHashCandidatePairsFromSigs(sigs, numHashes, bands, representativesOnly = true)
+          .filter(col("est_jaccard") >= threshold),
+        transitive
+      )
+    )
 
   /** Keep-BEST near-dedup: like `dedupNearMinHash(transitive = true)` but
     * each near-duplicate cluster retains its highest-`scoreCol` member
@@ -368,10 +398,10 @@ object Dedup {
     * so exact-dup groups and near-dup chains merge into one cluster and
     * elect one winner.
     *
-    * Same scale shape and EAGER contract as [[dedupNearMinHash]]: one
-    * signature scan feeds both passes, the cluster graph is skinny
-    * 2-column edges, and the winner election is one max_by aggregate per
-    * component. */
+    * Same scale shape as [[dedupNearMinHash]]: one signature scan feeds
+    * both passes, the cluster graph is skinny 2-column edges, and the
+    * winner election is one max_by aggregate per component. EAGER: see
+    * [[materialize]]. */
   def dedupNearMinHashKeepBest(
       df: DataFrame,
       idCol: String,
@@ -383,34 +413,27 @@ object Dedup {
       bands: Int = 4
   ): DataFrame = {
     val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigMins = sigs.groupBy("__sig").agg(min("__id").as("__min"))
-    val exactEdges = sigs
-      .join(sigMins, Seq("__sig"))
-      .filter(col("__id") > col("__min"))
-      .select(col("__min").as("id_a"), col("__id").as("id_b"))
-    val nearPairs =
-      minHashCandidatePairsFromSigs(sigs, numHashes, bands, representativesOnly = true)
-        .filter(col("est_jaccard") >= threshold)
-        .select("id_a", "id_b")
-    val comp = Graphs.connectedComponentsByMinLabel(
-      exactEdges.union(nearPairs), "id_a", "id_b"
-    )
     val scores = df.select(
       col(idCol).cast("long").as("id"),
       col(scoreCol).cast("double").as("__score")
     )
-    val winners = comp
-      .join(scores, Seq("id"))
-      .groupBy("component")
-      .agg(max_by(col("id"), struct(col("__score"), -col("id"))).as("__winner"))
-    val losers = comp
-      .join(winners, Seq("component"))
-      .filter(col("id") =!= col("__winner"))
-      .select(col("id").as("__loser"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    losers.count() // EAGER: build the loser set off the cached signatures
-    sigs.unpersist(blocking = false)
+    val losers = materialize(sigs) {
+      val nearPairs =
+        minHashCandidatePairsFromSigs(sigs, numHashes, bands, representativesOnly = true)
+          .filter(col("est_jaccard") >= threshold)
+          .select("id_a", "id_b")
+      val comp = Graphs.connectedComponentsByMinLabel(
+        groupMinPairs(sigs, "__sig").union(nearPairs), "id_a", "id_b"
+      )
+      val winners = comp
+        .join(scores, Seq("id"))
+        .groupBy("component")
+        .agg(max_by(col("id"), struct(col("__score"), -col("id"))).as("__winner"))
+      comp
+        .join(winners, Seq("component"))
+        .filter(col("id") =!= col("__winner"))
+        .select(col("id").as("__loser"))
+    }
     df.join(losers, df(idCol).cast("long") === col("__loser"), "left_anti")
   }
 
@@ -433,8 +456,8 @@ object Dedup {
     * semi-join the batch signature table on the kept ids) after the run.
     *
     * Cost: ONE scan of the batch text + skinny joins against the corpus
-    * signature table; the corpus text is never read. EAGER like
-    * [[dedupNearMinHash]] and for the same reason.
+    * signature table; the corpus text is never read. EAGER: see
+    * [[materialize]].
     */
   def dedupNearMinHashIncremental(
       newDocs: DataFrame,
@@ -446,54 +469,56 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 4
   ): DataFrame = {
+    val batchSigs = minHashSignatures(newDocs, idCol, textCol, shingleK, numHashes)
+    val losers = materialize(batchSigs) {
+      minHashReferenceMatches(batchSigs, corpusSigs, threshold, numHashes, bands)
+        .select(col("id").as("__loser"))
+        .union(minHashLosers(batchSigs, threshold, numHashes, bands, transitive = false))
+        .distinct()
+    }
+    newDocs.join(losers, newDocs(idCol) === col("__loser"), "left_anti")
+  }
+
+  /** Matches of each row of a MinHash signature table against a REFERENCE
+    * signature table (both `(__id, __sig)`), as (id, ref_id, est_jaccard):
+    * (a) identical signature — certain match, paired with the minimum
+    * reference id of that signature, est 1.0; (b) per LSH band bucket, the
+    * row pairs with the MINIMUM reference id sharing it and is kept when
+    * full-signature agreement >= `threshold`. The candidate model of
+    * [[dedupNearMinHashIncremental]]'s corpus passes and
+    * [[Decontam.fuzzyContaminationMatches]]; never pairs rows within one
+    * table, and the two id spaces may overlap. Only (band, id) rows ride
+    * the bucket join; signatures are attached to the deduplicated pairs.
+    * Both tables feed three consumers each. Not deduplicated. */
+  private[operators] def minHashReferenceMatches(
+      sigs: DataFrame,
+      refSigs: DataFrame,
+      threshold: Double,
+      numHashes: Int,
+      bands: Int
+  ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val batchSigs =
-      minHashSignatures(newDocs, idCol, textCol, shingleK, numHashes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // (a) exact vs corpus: semi join on the full signature
-    val exactVsCorpus = batchSigs
-      .join(corpusSigs.select("__sig"), Seq("__sig"), "left_semi")
-      .select(col("__id").as("__loser"))
-
-    // (b) banded vs corpus: per band bucket, the batch doc pairs with the
-    // minimum corpus id sharing it; verify full-signature agreement
-    def banded(sigs: DataFrame): DataFrame =
-      sigs.select(col("__id"), col("__sig"), explode(lshBands(col("__sig"), bands, r)).as("__band"))
-    val corpusMins = banded(corpusSigs).groupBy("__band").agg(min("__id").as("__cid"))
-    val nearVsCorpus = banded(batchSigs)
-      .join(corpusMins, Seq("__band"))
-      .select(col("__id"), col("__sig"), col("__cid"))
+    def banded(s: DataFrame): DataFrame =
+      s.select(col("__id"), explode(lshBands(col("__sig"), bands, r)).as("__band"))
+    val refSigMins = refSigs.groupBy("__sig").agg(min("__id").as("ref_id"))
+    val exact = sigs
+      .join(refSigMins, Seq("__sig"))
+      .select(col("__id").as("id"), col("ref_id"), lit(1.0).as("est_jaccard"))
+    val refBandMins = banded(refSigs).groupBy("__band").agg(min("__id").as("ref_id"))
+    val near = banded(sigs)
+      .join(refBandMins, Seq("__band"))
+      .select("__id", "ref_id")
       .distinct()
-      .join(
-        corpusSigs.select(col("__id").as("__cid"), col("__sig").as("__csig")),
-        Seq("__cid")
+      .join(sigs, Seq("__id"))
+      .join(refSigs.select(col("__id").as("ref_id"), col("__sig").as("__rsig")), Seq("ref_id"))
+      .select(
+        col("__id").as("id"),
+        col("ref_id"),
+        minHashSimilarity(col("__sig"), col("__rsig")).as("est_jaccard")
       )
-      .filter(minHashSimilarity(col("__sig"), col("__csig")) >= threshold)
-      .select(col("__id").as("__loser"))
-
-    // (c) in-batch: identical-signature pass + bucket-min near pass, as in
-    // dedupNearMinHash
-    val sigMins = batchSigs.groupBy("__sig").agg(min("__id").as("__min"))
-    val exactInBatch = batchSigs
-      .join(sigMins, Seq("__sig"))
-      .filter(col("__id") > col("__min"))
-      .select(col("__id").as("__loser"))
-    val nearInBatch =
-      minHashCandidatePairsFromSigs(batchSigs, numHashes, bands, representativesOnly = true)
-        .filter(col("est_jaccard") >= threshold)
-        .select(col("id_b").as("__loser"))
-
-    val losers = exactVsCorpus
-      .union(nearVsCorpus)
-      .union(exactInBatch)
-      .union(nearInBatch)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    losers.count()
-    batchSigs.unpersist(blocking = false)
-    newDocs.join(losers, newDocs(idCol) === col("__loser"), "left_anti")
+      .filter(col("est_jaccard") >= threshold)
+    exact.union(near)
   }
 
   /** Near-duplicate pairs VERIFIED by exact shingle-set Jaccard — the
@@ -518,7 +543,10 @@ object Dedup {
     * distinct-shingle inverted index; the intersection join touches only
     * candidate pairs (bounded linear), shuffling skinny (id, shingle)
     * rows. Docs with NULL/too-short text produce no shingles and are never
-    * candidates (always retained), mirroring [[dedupNearMinHash]]. */
+    * candidates (always retained), mirroring [[dedupNearMinHash]].
+    *
+    * EAGER: the pair table is built off the held set table — see
+    * [[materialize]]. */
   def minHashVerifiedPairs(
       df: DataFrame,
       idCol: String,
@@ -529,13 +557,7 @@ object Dedup {
       bands: Int = 4
   ): DataFrame = {
     val sets = verifiedSetTable(df, idCol, textCol, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verified =
-      minHashVerifiedPairsPlan(sets, threshold, numHashes, bands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    verified.count() // EAGER off the cached set table, then release it
-    sets.unpersist(blocking = false)
-    verified
+    materialize(sets)(minHashVerifiedPairsPlan(sets, threshold, numHashes, bands))
   }
 
   /** Distinct-shingle-set table (id, set) feeding every verified-dedup
@@ -592,15 +614,8 @@ object Dedup {
         col("__id"),
         md5(concat_ws("\u0001", array_sort(col("__set")))).as("__d")
       )
-    val digMins = digests.groupBy("__d").agg(min("__id").as("__min"))
-    val exactPairs = digests
-      .join(digMins, Seq("__d"))
-      .filter(col("__id") > col("__min"))
-      .select(
-        col("__min").as("id_a"),
-        col("__id").as("id_b"),
-        lit(1.0).as("jaccard")
-      )
+    val exactPairs = groupMinPairs(digests, "__d")
+      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
 
     val cand =
       minHashCandidatePairsFromSigs(sigs, numHashes, bands, representativesOnly = true)
@@ -667,8 +682,9 @@ object Dedup {
     * candidates, drop every doc with a VERIFIED smaller-id near-duplicate
     * (or, `transitive = true`, everything above its verified-cluster
     * minimum). The GPT-3/RefinedWeb-documented policy where the LSH stage
-    * only proposes and exact Jaccard decides. Same EAGER contract as
-    * [[dedupNearMinHash]]. */
+    * only proposes and exact Jaccard decides. EAGER: the loser-id set is
+    * built off the held set table — see [[materialize]]; the verified pair
+    * table itself is never persisted. */
   def dedupNearMinHashVerified(
       df: DataFrame,
       idCol: String,
@@ -679,19 +695,11 @@ object Dedup {
       bands: Int = 4,
       transitive: Boolean = false
   ): DataFrame = {
-    val pairs = minHashVerifiedPairs(
-      df, idCol, textCol, threshold, shingleK, numHashes, bands)
-    val losers =
-      (if (transitive) {
-         Graphs
-           .connectedComponentsByMinLabel(pairs.select("id_a", "id_b"), "id_a", "id_b")
-           .filter(col("id") > col("component"))
-           .select(col("id").as("__loser"))
-       } else {
-         pairs.select(col("id_b").as("__loser"))
-       }).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    losers.count()
+    val sets = verifiedSetTable(df, idCol, textCol, shingleK)
+    val losers = materialize(sets) {
+      losersFromPairs(minHashVerifiedPairsPlan(sets, threshold, numHashes, bands), transitive)
+        .distinct()
+    }
     df.join(losers, df(idCol) === col("__loser"), "left_anti")
   }
 
@@ -787,30 +795,24 @@ object Dedup {
     val sigs = simHashSignatures(df, idCol, textCol)
       .select(col(idCol).as("__id"), col("simhash"))
       .localCheckpoint(false)
+    simHashPairsFromSigs(sigs, maxHamming, representativesOnly)
+  }
+
+  /** [[simHashCandidatePairs]] over a PRECOMPUTED (`__id`, `simhash`)
+    * table — the SimHash twin of [[minHashCandidatePairsFromSigs]]:
+    * skinny quarter-band pairing ([[bucketPairs]]), then the signatures
+    * attached to the surviving pairs and (id_a, id_b, hamming) kept within
+    * `maxHamming`. */
+  private def simHashPairsFromSigs(
+      sigs: DataFrame,
+      maxHamming: Int,
+      representativesOnly: Boolean
+  ): DataFrame = {
     val banded = sigs.withColumn(
       "__band",
       explode(simHashQuarterBands(col("simhash")))
     )
-    // skinny pairing (only (band, id) rides the join), signatures attached
-    // to the surviving deduped pairs — same shape as the MinHash and
-    // embedding paths
-    val pairs =
-      if (representativesOnly) {
-        val mins = banded.groupBy("__band").agg(min("__id").as("__min"))
-        banded
-          .join(mins, Seq("__band"))
-          .filter(col("__id") > col("__min"))
-          .select(col("__min").as("id_a"), col("__id").as("id_b"))
-          .distinct()
-      } else {
-        val a = banded.select(col("__band"), col("__id").as("id_a"))
-        val b = banded.select(col("__band"), col("__id").as("id_b"))
-        a.join(b, Seq("__band"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b")
-          .distinct()
-      }
-    pairs
+    bucketPairs(banded, "__band", representativesOnly)
       .join(sigs.select(col("__id").as("id_a"), col("simhash").as("sh_a")), Seq("id_a"))
       .join(sigs.select(col("__id").as("id_b"), col("simhash").as("sh_b")), Seq("id_b"))
       .select(
@@ -820,6 +822,22 @@ object Dedup {
       )
       .filter(col("hamming") <= maxHamming)
   }
+
+  /** The in-table losers of an (`__id`, `simhash`) signature table, the
+    * Hamming counterpart of [[minHashLosers]]: every id above the minimum
+    * of its identical-signature group, plus the [[losersFromPairs]] of the
+    * quarter-bucket-minimum pairs within `maxHamming`. Not deduplicated. */
+  private def hammingLosers(
+      sigs: DataFrame,
+      maxHamming: Int,
+      transitive: Boolean
+  ): DataFrame =
+    losersFromPairs(groupMinPairs(sigs, "simhash"), transitive = false).union(
+      losersFromPairs(
+        simHashPairsFromSigs(sigs, maxHamming, representativesOnly = true),
+        transitive
+      )
+    )
 
   /** Remove SimHash near-duplicates: the SimHash counterpart of
     * [[dedupNearMinHash]], with the same two-pass scalable shape.
@@ -834,10 +852,8 @@ object Dedup {
     * doc is within distance"; `transitive = true` upgrades to full
     * connected-component clustering over the qualifying pairs.
     *
-    * EAGER like [[dedupNearMinHash]]: signatures are persisted for the one
-    * job that materializes the skinny loser-id set, then released — the
-    * signature subtree has ~6 consumers here, and recomputing it per
-    * consumer would mean ~6 tokenize+hash passes over the corpus.
+    * EAGER: the loser-id set is built off the held signature table (~6
+    * consumers here) — see [[materialize]].
     */
   def dedupNearSimHash(
       df: DataFrame,
@@ -848,47 +864,9 @@ object Dedup {
   ): DataFrame = {
     val sigs = simHashSignatures(df, idCol, textCol)
       .select(col(idCol).as("__id"), col("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // groupBy-min + join, not windows: identical-signature clusters and hot
-    // quarter buckets would otherwise serialize into single tasks (see
-    // dedupNearMinHash) — the aggregate combines map-side and the joins
-    // stay splittable under AQE skew handling.
-    val simMins = sigs.groupBy("simhash").agg(min("__id").as("__min"))
-    val exactLosers = sigs
-      .join(simMins, Seq("simhash"))
-      .filter(col("__id") > col("__min"))
-      .select(col("__id").as("__loser"))
-
-    val banded = sigs.withColumn(
-      "__band",
-      explode(simHashQuarterBands(col("simhash")))
-    )
-    val bandMins = banded.groupBy("__band").agg(min("__id").as("__minId"))
-    val repPairs = banded
-      .join(bandMins, Seq("__band"))
-      .filter(col("__id") > col("__minId"))
-      .select(col("__minId").as("id_a"), col("__id").as("id_b"))
-      .distinct()
-      .join(sigs.select(col("__id").as("id_a"), col("simhash").as("sh_a")), Seq("id_a"))
-      .join(sigs.select(col("__id").as("id_b"), col("simhash").as("sh_b")), Seq("id_b"))
-      .filter(hammingDistance(col("sh_a"), col("sh_b")) <= maxHamming)
-      .select("id_a", "id_b")
-
-    val nearLosers =
-      if (transitive)
-        Graphs
-          .connectedComponentsByMinLabel(repPairs, "id_a", "id_b")
-          .filter(col("id") > col("component"))
-          .select(col("id").as("__loser"))
-      else repPairs.select(col("id_b").as("__loser"))
-
-    val losers = exactLosers
-      .union(nearLosers)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    losers.count() // one pass over the cached signatures builds the loser set
-    sigs.unpersist(blocking = false)
+    val losers = materialize(sigs) {
+      hammingLosers(sigs, maxHamming, transitive).distinct()
+    }
     df.join(losers, df(idCol) === col("__loser"), "left_anti")
   }
 
@@ -899,7 +877,7 @@ object Dedup {
     * keep the minimum id; quarter-bucket pigeonhole pairing (EXACT for
     * `maxHamming <= 3`) drops rows within distance of their bucket
     * minimum; `transitive = true` upgrades to full component clustering.
-    * Returns the kept rows of `sigs`. */
+    * Returns the kept rows of `sigs`. Lazy. */
   def dedupByHamming(
       sigTable: DataFrame,
       idCol: String,
@@ -909,35 +887,8 @@ object Dedup {
   ): DataFrame = {
     val sigs = sigTable
       .select(col(idCol).cast("long").as("__id"), col(sigCol).cast("long").as("simhash"))
-    val simMins = sigs.groupBy("simhash").agg(min("__id").as("__min"))
-    val exactLosers = sigs
-      .join(simMins, Seq("simhash"))
-      .filter(col("__id") > col("__min"))
-      .select(col("__id").as("__loser"))
-    val banded = sigs.withColumn(
-      "__band",
-      explode(simHashQuarterBands(col("simhash")))
-    )
-    val bandMins = banded.groupBy("__band").agg(min("__id").as("__minId"))
-    val repPairs = banded
-      .join(bandMins, Seq("__band"))
-      .filter(col("__id") > col("__minId"))
-      .select(col("__minId").as("id_a"), col("__id").as("id_b"))
-      .distinct()
-      .join(sigs.select(col("__id").as("id_a"), col("simhash").as("sh_a")), Seq("id_a"))
-      .join(sigs.select(col("__id").as("id_b"), col("simhash").as("sh_b")), Seq("id_b"))
-      .filter(hammingDistance(col("sh_a"), col("sh_b")) <= maxHamming)
-      .select("id_a", "id_b")
-    val nearLosers =
-      if (transitive)
-        Graphs
-          .connectedComponentsByMinLabel(repPairs, "id_a", "id_b")
-          .filter(col("id") > col("component"))
-          .select(col("id").as("__loser"))
-      else repPairs.select(col("id_b").as("__loser"))
-    val losers = exactLosers.union(nearLosers).distinct()
     sigTable.join(
-      losers,
+      hammingLosers(sigs, maxHamming, transitive).distinct(),
       sigTable(idCol).cast("long") === col("__loser"),
       "left_anti"
     )
@@ -960,8 +911,7 @@ object Dedup {
     *   (c) it duplicates an earlier batch row (identical-signature +
     *       quarter-bucket-min in-batch passes, as in [[dedupNearSimHash]]).
     * To update the store, append `simHashSignatures(kept, ...)` after the
-    * run. EAGER like the other dedup operators, for the same
-    * multiple-consumer reason.
+    * run. EAGER: see [[materialize]].
     */
   def dedupNearSimHashIncremental(
       newDocs: DataFrame,
@@ -972,62 +922,36 @@ object Dedup {
   ): DataFrame = {
     val batchSigs = simHashSignatures(newDocs, idCol, textCol)
       .select(col(idCol).as("__id"), col("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpus =
       corpusSigs.select(col(idCol).as("__cid"), col("simhash").as("__csim"))
-
-    // (a) exact vs corpus: semi join on the full 64-bit signature
-    val exactVsCorpus = batchSigs
-      .join(corpus.select(col("__csim").as("simhash")), Seq("simhash"), "left_semi")
-      .select(col("__id").as("__loser"))
-
-    // (b) quarter-banded vs corpus: batch doc pairs with the minimum
-    // corpus id of each shared bucket, verified within maxHamming
-    val corpusMins = corpus
-      .select(col("__cid"), explode(simHashQuarterBands(col("__csim"))).as("__band"))
-      .groupBy("__band")
-      .agg(min("__cid").as("__cid"))
-    val nearVsCorpus = batchSigs
-      .select(
-        col("__id"), col("simhash"),
-        explode(simHashQuarterBands(col("simhash"))).as("__band")
-      )
-      .join(corpusMins, Seq("__band"))
-      .select("__id", "simhash", "__cid")
-      .distinct()
-      .join(corpus, Seq("__cid"))
-      .filter(hammingDistance(col("simhash"), col("__csim")) <= maxHamming)
-      .select(col("__id").as("__loser"))
-
-    // (c) in-batch: identical-signature pass + quarter-bucket-min pairs
-    val simMins = batchSigs.groupBy("simhash").agg(min("__id").as("__min"))
-    val exactInBatch = batchSigs
-      .join(simMins, Seq("simhash"))
-      .filter(col("__id") > col("__min"))
-      .select(col("__id").as("__loser"))
-    val bandedBatch = batchSigs.select(
-      col("__id"),
-      explode(simHashQuarterBands(col("simhash"))).as("__band")
-    )
-    val bandMins = bandedBatch.groupBy("__band").agg(min("__id").as("__minId"))
-    val nearInBatch = bandedBatch
-      .join(bandMins, Seq("__band"))
-      .filter(col("__id") > col("__minId"))
-      .select(col("__minId").as("id_a"), col("__id").as("id_b"))
-      .distinct()
-      .join(batchSigs.select(col("__id").as("id_a"), col("simhash").as("sh_a")), Seq("id_a"))
-      .join(batchSigs.select(col("__id").as("id_b"), col("simhash").as("sh_b")), Seq("id_b"))
-      .filter(hammingDistance(col("sh_a"), col("sh_b")) <= maxHamming)
-      .select(col("id_b").as("__loser"))
-
-    val losers = exactVsCorpus
-      .union(nearVsCorpus)
-      .union(exactInBatch)
-      .union(nearInBatch)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    losers.count()
-    batchSigs.unpersist(blocking = false)
+    val losers = materialize(batchSigs) {
+      // (a) exact vs corpus: semi join on the full 64-bit signature
+      val exactVsCorpus = batchSigs
+        .join(corpus.select(col("__csim").as("simhash")), Seq("simhash"), "left_semi")
+        .select(col("__id").as("__loser"))
+      // (b) quarter-banded vs corpus: batch doc pairs with the minimum
+      // corpus id of each shared bucket, verified within maxHamming
+      val corpusMins = corpus
+        .select(col("__cid"), explode(simHashQuarterBands(col("__csim"))).as("__band"))
+        .groupBy("__band")
+        .agg(min("__cid").as("__cid"))
+      val nearVsCorpus = batchSigs
+        .select(
+          col("__id"), col("simhash"),
+          explode(simHashQuarterBands(col("simhash"))).as("__band")
+        )
+        .join(corpusMins, Seq("__band"))
+        .select("__id", "simhash", "__cid")
+        .distinct()
+        .join(corpus, Seq("__cid"))
+        .filter(hammingDistance(col("simhash"), col("__csim")) <= maxHamming)
+        .select(col("__id").as("__loser"))
+      // (c) in-batch: identical-signature + quarter-bucket-min passes
+      exactVsCorpus
+        .union(nearVsCorpus)
+        .union(hammingLosers(batchSigs, maxHamming, transitive = false))
+        .distinct()
+    }
     newDocs.join(losers, newDocs(idCol) === col("__loser"), "left_anti")
   }
 
@@ -1403,9 +1327,6 @@ object Dedup {
     }
   }
 
-  /** Embedding near-duplicate pairs: cosine >= threshold among candidates
-    * sharing a hyperplane-LSH bucket (see Similarity.annTopK for the
-    * bucketing rationale). */
   /** OR-amplified multi-band variant of [[embeddingDedupPairs]] — the
     * recall dial: each of `planeSets.size` independent hyperplane banks
     * buckets every vector, a pair is a candidate if ANY bank co-buckets it
@@ -1443,14 +1364,8 @@ object Dedup {
       col("__id"),
       explode(array(bands: _*)).as("__bucket")
     )
-    val a = banded.select(col("__bucket"), col("__id").as("id_a"))
-    val b = banded.select(col("__bucket"), col("__id").as("id_b"))
-    val pairs = a
-      .join(b, Seq("__bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct() // banks overlap: collapse duplicate discoveries
-    pairs
+    // banks overlap: the pair distinct collapses duplicate discoveries
+    bucketPairs(banded, "__bucket", representativesOnly = false)
       .join(vecs.select(col("__id").as("id_a"), col("__v").as("v_a")), Seq("id_a"))
       .join(vecs.select(col("__id").as("id_b"), col("__v").as("v_b")), Seq("id_b"))
       .select(
@@ -1482,16 +1397,7 @@ object Dedup {
   ): DataFrame = {
     val pairs =
       embeddingDedupPairsMultiBand(df, idCol, vecCol, planeSets, threshold)
-    val losers =
-      if (transitive)
-        Graphs
-          .connectedComponentsByMinLabel(
-            pairs.select("id_a", "id_b"), "id_a", "id_b"
-          )
-          .filter(col("id") > col("component"))
-          .select(col("id").as("__loser"))
-      else
-        pairs.select(col("id_b").as("__loser")).distinct()
+    val losers = losersFromPairs(pairs, transitive).distinct()
     df.join(losers, df(idCol) === col("__loser"), "left_anti")
   }
 
@@ -1558,6 +1464,9 @@ object Dedup {
     df.join(losers, df(idCol) === col("__loser"), "left_anti")
   }
 
+  /** Embedding near-duplicate pairs: cosine >= threshold among candidates
+    * sharing a hyperplane-LSH bucket (see Similarity.annTopK for the
+    * bucketing rationale). */
   def embeddingDedupPairs(
       df: DataFrame,
       idCol: String,
@@ -1574,14 +1483,7 @@ object Dedup {
       col("__id"),
       hyperplaneBucket(col("__v"), planes).as("__bucket")
     )
-    val a = bucketed.select(col("__bucket"), col("__id").as("id_a"))
-    val b = bucketed.select(col("__bucket"), col("__id").as("id_b"))
-    val pairs = a
-      .join(b, Seq("__bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    pairs
+    bucketPairs(bucketed, "__bucket", representativesOnly = false)
       .join(vecs.select(col("__id").as("id_a"), col("__v").as("v_a")), Seq("id_a"))
       .join(vecs.select(col("__id").as("id_b"), col("__v").as("v_b")), Seq("id_b"))
       .select(

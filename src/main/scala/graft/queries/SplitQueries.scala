@@ -163,7 +163,7 @@ private[graft] object SplitQueries {
       val clean = Decontam.decontaminate(
         deduped, docs.filter(col("doc_id") % 10 === 0), "doc_id", "text", n = 4
       )
-      // gate barrier (the crawlCurate persistGated pattern): filtering on
+      // gate barrier (the crawlCurate gated-slice persist): filtering on
       // the computed quality column would substitute the scorer into the
       // pushed-down predicate and re-run it against the decontam output
       val scored = TextAnalysis

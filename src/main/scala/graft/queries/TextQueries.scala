@@ -604,8 +604,8 @@ private[graft] object TextQueries {
     // extract+score pipeline into the pushed-down predicate (evaluating
     // it twice per row), and the presentation ORDER BY's range-boundary
     // sampling would run the per-row pipeline a third time — the barrier
-    // makes extraction run exactly once (the crawlCurate persistGated
-    // pattern).
+    // makes extraction run exactly once (the crawlCurate gated-slice
+    // persist).
     "q_html_pipeline" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("html", syntheticHtml)
@@ -806,7 +806,7 @@ private[graft] object TextQueries {
     "q_domain_dedup" -> ((s, dir) => {
       import graft.operators.Urls
       val docs = t(s, dir, "documents").withColumn("url", syntheticUrl)
-      // gated-slice barrier (the crawlCurate persistGated pattern):
+      // gated-slice barrier (as in crawlCurate):
       // dedupNearMinHash scans its input twice by contract (signatures +
       // the final anti-join), so without the barrier the URL-parse +
       // per-domain cap window re-runs for every consumer

@@ -1505,6 +1505,24 @@ class CrawlSpec extends SparkSpec {
     assert(p.contains("unhex"), s"expected md5 digest gram key:\n$p")
   }
 
+  test("dedupNearMinHashVerified leaves exactly one persisted table: its loser set") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "dog lazy the over jumps fox brown quick the"), // same token set
+      (3L, "completely different content about spark engines")
+    ).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val kept = Dedup.dedupNearMinHashVerified(docs, "doc_id", "text", threshold = 0.9)
+    val added = sc.getPersistentRDDs.keySet -- before
+    try {
+      assert(added.size == 1, s"persisted RDDs left by one call: $added")
+      assert(kept.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
+    } finally
+      sc.getPersistentRDDs.filter { case (id, _) => added.contains(id) }
+        .foreach { case (_, rdd) => rdd.unpersist(blocking = true) }
+  }
+
   test("dedupNearMinHashVerified: survivors have no verified smaller-id dup") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),

@@ -2710,6 +2710,34 @@ class ScaleSpec extends SparkSpec {
     assert(kept.toSeq == Seq(11L, 13L))
   }
 
+  test("incremental simhash dedup: exact and near corpus dups, in-batch dup, survivor") {
+    val near = "the river runs past the old mill where the miller once ground " +
+      "wheat for the whole valley and the children played by the water " +
+      "every summer afternoon"
+    val other = "completely different content about spark engines and query planners"
+    val corpus = Seq((1L, near), (2L, other)).toDF("doc_id", "text")
+    val batch = Seq(
+      (10L, other.split(" ").reverse.mkString(" ")), // same tokens as corpus 2
+      (11L, near.replaceFirst("river", "brook")), // one word off corpus 1
+      (12L, "a genuinely novel document about distributed joins and watermarks"),
+      (13L, "watermarks and joins distributed about document novel genuinely a"),
+      (14L, "entirely fresh text mentioning state stores and checkpoints")
+    ).toDF("doc_id", "text")
+    val corpusSigs = Dedup.simHashSignatures(corpus, "doc_id", "text")
+    // doc 11 is a NEAR match: within maxHamming of corpus 1, not identical
+    val sig = Dedup.simHashSignatures(corpus.union(batch), "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val d = java.lang.Long.bitCount(sig(11L) ^ sig(1L))
+    assert(d >= 1 && d <= 3, s"doc 11 is $d bits from corpus doc 1")
+    val kept = Dedup
+      .dedupNearSimHashIncremental(batch, "doc_id", "text", corpusSigs, maxHamming = 3)
+      .select("doc_id")
+      .collect()
+      .map(_.getLong(0))
+      .sorted
+    assert(kept.toSeq == Seq(12L, 14L))
+  }
+
   test("heavyHitters returns per-group top values by frequency") {
     import graft.operators.TopN
     val df = Seq(
