@@ -67,32 +67,22 @@ def main() -> int:
         if p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    failures = []
-    results = {}
-    for name in sorted(oracle):
+    def judge(name: str) -> str:
         qdir = out_dir / name
         if not qdir.exists():
-            failures.append(name)
-            results[name] = "MISSING (query did not run)"
-            continue
+            return "MISSING (query did not run)"
         files = list(qdir.glob("*.parquet"))
         if not files:
-            failures.append(name)
-            results[name] = "EMPTY OUTPUT DIR"
-            continue
+            return "EMPTY OUTPUT DIR"
         got = pd.concat([pd.read_parquet(f) for f in sorted(files)])
         want = con.sql(oracle[name]).df()
 
         if sorted(got.columns) != sorted(want.columns):
-            failures.append(name)
-            results[name] = (
+            return (
                 f"SCHEMA MISMATCH spark={sorted(got.columns)} duck={sorted(want.columns)}"
             )
-            continue
         if len(got) != len(want):
-            failures.append(name)
-            results[name] = f"ROWCOUNT MISMATCH spark={len(got)} duck={len(want)}"
-            continue
+            return f"ROWCOUNT MISMATCH spark={len(got)} duck={len(want)}"
         g, w = canon(got), canon(want)
         json_rows[name] = {
             "rows_match": len(got) == len(want),
@@ -106,13 +96,19 @@ def main() -> int:
             diff = next(
                 (i, a, b) for i, (a, b) in enumerate(zip(g, w)) if a != b
             )
-            failures.append(name)
-            results[name] = f"VALUE MISMATCH first diff at sorted row {diff[0]}:\n  spark={diff[1]}\n  duck ={diff[2]}"
-            continue
-        results[name] = f"OK ({len(got)} rows)"
+            return f"VALUE MISMATCH first diff at sorted row {diff[0]}:\n  spark={diff[1]}\n  duck ={diff[2]}"
+        return f"OK ({len(got)} rows)"
 
-    for name, status in results.items():
-        print(f"{'PASS' if status.startswith('OK') else 'FAIL'} {name}: {status}")
+    failures = []
+    results = {}
+    for name in sorted(oracle):
+        status = results[name] = judge(name)
+        ok = status.startswith("OK")
+        if not ok:
+            failures.append(name)
+        # one line per query as soon as it is decided, so a redirected
+        # run shows its progress
+        print(f"{'PASS' if ok else 'FAIL'} {name}: {status}", flush=True)
     print(f"\n{len(results) - len(failures)}/{len(results)} queries match")
     if json_out:
         for name, status in results.items():

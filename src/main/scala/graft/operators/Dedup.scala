@@ -1421,8 +1421,11 @@ object Dedup {
     * (cluster, id, dist) — vectors are re-attached to candidate pairs
     * once per side — and is O(sum of cluster sizes squared): choose `k`
     * proportional to corpus size to hold mean cluster size constant
-    * (the paper runs k = 11k on 100M docs), and the k-means rounds
-    * themselves never shuffle. No global sort anywhere.
+    * (the paper runs k = 11k on 100M docs). The k-means rounds read a
+    * call-scoped held copy of the input and shuffle only k centroid sums
+    * per partition each ([[Similarity.kmeansTrain]]). The result is lazy:
+    * each action on it runs the pair join and the anti-join again. No
+    * global sort anywhere.
     */
   def semDeDup(
       df: DataFrame,

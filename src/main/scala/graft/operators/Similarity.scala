@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
+import java.math.BigInteger
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over embedding columns (north-star extension;
   * SURVEY.md §7 `graft.scale`).
@@ -282,8 +285,9 @@ object Similarity {
     *  - assignment = argmin over the codegen'd sequential
     *    squared-distance loop, ties to the lowest cluster id;
     *  - centroid update: each element is floor-quantized to 1e-6
-    *    (`floor(x * 1e6)` as a long), summed EXACTLY in decimal, and
-    *    the mean `sum / 1e6 / n` is truncated to float — integer sums
+    *    (`floor(x * 1e6)` as a long), summed EXACTLY (a long, carried
+    *    into a BigInteger on overflow), and the mean `sum / 1e6 / n` is
+    *    truncated to float — integer sums
     *    make the update order-independent, so the model cannot depend
     *    on partitioning; empty clusters keep their previous centroid.
     *
@@ -291,12 +295,17 @@ object Similarity {
     * and `distCol` (squared distance to the final centroid, rounded to
     * 6 decimals — the SemDeDup "keep closest/farthest" ranking signal).
     *
-    * Scale shape: per round, assignment is a pure per-row codegen'd
-    * expression against driver-side literal centroids (no join, no
-    * shuffle) and the update is ONE hash aggregate over (cluster, dim)
-    * keys — k*dim rows collected, a model-sized driver action like the
-    * IVF codebook bootstrap. `rounds` is a small constant; nothing
-    * materializes pairs or sorts globally.
+    * Scale shape: training reads the input once — its skinny
+    * (id, vector, seed key) projection is held MEMORY_AND_DISK for the
+    * call, filled by the seed query. Per round, assignment is a pure
+    * per-row codegen'd expression against driver-side literal centroids
+    * (no join), and the update is one map-side pass that adds each row
+    * into its cluster's exact sums; partials combine per cluster on
+    * executors (one small shuffle of k sums per partition) and the
+    * driver receives k sums — a model-sized action like the IVF codebook
+    * bootstrap. The final assignment is per-row compute over the
+    * original input. `rounds` is a small constant; nothing materializes
+    * pairs or sorts globally.
     */
   def kmeansCluster(
       df: DataFrame,
@@ -334,7 +343,11 @@ object Similarity {
   /** Train the [[kmeansCluster]] codebook and return it as driver-side
     * centroids (cluster i = element i) — feed to [[kmeansAssign]] to
     * label other data with the same model. Same determinism contract as
-    * [[kmeansCluster]]. */
+    * [[kmeansCluster]].
+    *
+    * Scale shape: the [[lloydTrain]] core, as in [[kmeansCluster]] — the
+    * input is read once, then one map-side pass per round; the driver
+    * receives k sums per round. Nothing stays persisted after the call. */
   def kmeansTrain(
       df: DataFrame,
       idCol: String,
@@ -344,64 +357,73 @@ object Similarity {
   ): Seq[Seq[Float]] = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 0, "rounds must be >= 0")
-    val src = df.filter(col(vecCol).isNotNull)
+    lloydTrain(df, idCol, vecCol, k, rounds, "no non-null vectors to cluster") {
+      seeds => (None, Seq(seeds))
+    }.head
+  }
 
-    def assign(centroids: Seq[Seq[Float]], in: DataFrame): DataFrame = in
-      .withColumn("__cl", nearestCentroid(col(vecCol), centroids).getField("cluster"))
-
-    // model-sized driver actions: k seed vectors, then k*dim sums per round
-    var centroids: Seq[Seq[Float]] = src
-      .select(col(idCol), col(vecCol))
-      .withColumn(
-        "__h",
-        graft.functions.TextFunctions.md5Prefix60(col(idCol).cast("string"))
+  /** The deterministic Lloyd loop under [[kmeansTrain]] and [[pqTrain]].
+    * `layout` turns the k seed vectors into the starting codebooks and
+    * their subvector width: `None` = one codebook over the whole
+    * (possibly ragged) vector; `Some(w)` = codebook s over elements
+    * `[s*w, (s+1)*w)`, the `slice` PQ assigns on.
+    *
+    * The input is projected to (id, vector, md5 seed key) and persisted
+    * for this call only (released in a `finally`): the seed query fills
+    * the cache, every round reads it, so a lazy input runs once. Each
+    * round assigns rows with the native [[nearestCentroid]] and takes
+    * each row once in [[CentroidSums]], keyed by (codebook, cluster);
+    * partials combine on executors per key and the driver averages
+    * `sum / 1e6 / n` to float. Keys no row reached keep the old centroid.
+    */
+  private def lloydTrain(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      rounds: Int,
+      noRows: String
+  )(
+      layout: Seq[Seq[Float]] => (Option[Int], Seq[Seq[Seq[Float]]])
+  ): Seq[Seq[Seq[Float]]] = {
+    val held = df
+      .filter(col(vecCol).isNotNull)
+      .select(
+        col(idCol).as("__id"),
+        col(vecCol).as("__v"),
+        graft.functions.TextFunctions.md5Prefix60(col(idCol).cast("string")).as("__h")
       )
-      .orderBy(col("__h"), col(idCol))
-      .limit(k)
-      .select(col(vecCol))
-      .collect()
-      .map(_.getSeq[Float](0).toSeq)
-      .toSeq
-    require(centroids.nonEmpty, "no non-null vectors to cluster")
-
-    for (_ <- 1 to rounds) {
-      val upd = assign(centroids, src)
-        .select(col("__cl"), posexplode(col(vecCol)).as(Seq("__pos", "__e")))
-        .groupBy(col("__cl"), col("__pos"))
-        .agg(
-          sum(
-            floor(col("__e").cast("double") * lit(1000000.0)).cast("decimal(38,0)")
-          ).as("__s"),
-          count(lit(1)).as("__n"),
-          // sum() SKIPS nulls while count(1) counts every row, so a MIXED
-          // null/non-null (cluster, dim) would silently average over too
-          // many rows; the count mismatch catches both the mixed and the
-          // all-null case loudly
-          count(col("__e")).as("__nn")
-        )
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // model-sized driver actions: k seed vectors, then k sums per round
+      val seeds: Seq[Seq[Float]] = held
+        .orderBy(col("__h"), col("__id"))
+        .limit(k)
+        .select(col("__v"))
         .collect()
-        .groupBy(_.getInt(0))
-        .map { case (cl, rows) =>
-          val dim = rows.map(_.getInt(1)).max + 1
-          val v = new Array[Float](dim)
-          rows.foreach { r =>
-            require(
-              r.getLong(3) == r.getLong(4),
-              s"null embedding element in cluster $cl dim ${r.getInt(1)} " +
-                s"(${r.getLong(3) - r.getLong(4)} of ${r.getLong(3)} rows): " +
-                "kmeans requires fully-populated vectors (null VECTORS are " +
-                "filtered; null ELEMENTS are data corruption)"
-            )
-            v(r.getInt(1)) =
-              (r.getDecimal(2).doubleValue() / 1000000.0 / r.getLong(3).toDouble).toFloat
+        .map(_.getSeq[Float](0).toSeq)
+        .toSeq
+      require(seeds.nonEmpty, noRows)
+      val (width, init) = layout(seeds)
+      def piece(s: Int): Column =
+        width.fold(col("__v"))(w => slice(col("__v"), s * w + 1, w))
+      var books = init
+      for (_ <- 1 to rounds) {
+        val clusters = books.indices.map(s =>
+          nearestCentroid(piece(s), books(s)).getField("cluster"))
+        val sums = CentroidSums.perKey(
+          held.select(array(clusters: _*), col("__v")), k, books.size, width)
+        books = books.zipWithIndex.map { case (book, s) =>
+          book.zipWithIndex.map { case (old, c) =>
+            sums.get(s * k + c).fold(old) { acc =>
+              width.fold(acc.centroid(acc.length, s"cluster $c", "kmeans"))(w =>
+                acc.centroid(w, s"subspace $s cluster $c", "PQ"))
+            }
           }
-          cl -> v.toSeq
         }
-      centroids = centroids.zipWithIndex.map { case (old, ci) =>
-        upd.getOrElse(ci, old)
       }
-    }
-    centroids
+      books
+    } finally held.unpersist(blocking = false)
   }
 
   /** Persist an IVF index to disk: every vector labeled with its nearest
@@ -1130,14 +1152,13 @@ object Similarity {
     * model PER SUBSPACE (md5-ranked seeds — the same k seed rows feed
     * every subspace — floor-quantized integer centroid sums so the mean
     * is order-independent, empty clusters carrying the previous
-    * centroid), all subspaces trained together in ONE corpus scan per
-    * round (the per-subspace assignment explodes to the same element
-    * volume a single full-width k-means round shuffles). Returns
-    * `codebooks(s)(c)` = centroid `c` of subspace `s`; vector width must
-    * divide evenly into `numSubspaces`.
+    * centroid). Returns `codebooks(s)(c)` = centroid `c` of subspace `s`;
+    * vector width must divide evenly into `numSubspaces`.
     *
-    * Driver actions are model-sized only: k seed vectors, then
-    * numSubspaces * k * subDim quantized sums per round. */
+    * Scale shape: the [[lloydTrain]] core shared with [[kmeansTrain]] —
+    * the input is read once, and all subspaces train together in one
+    * map-side pass per round, keyed by (subspace, cluster); the driver
+    * receives numSubspaces * k sums per round. */
   def pqTrain(
       df: DataFrame,
       idCol: String,
@@ -1149,84 +1170,17 @@ object Similarity {
     require(numSubspaces >= 1, "numSubspaces must be >= 1")
     require(k >= 1, "k must be >= 1")
     require(rounds >= 0, "rounds must be >= 0")
-    val src = df.filter(col(vecCol).isNotNull)
-    val seeds: Seq[Seq[Float]] = src
-      .select(col(idCol), col(vecCol))
-      .withColumn(
-        "__h",
-        graft.functions.TextFunctions.md5Prefix60(col(idCol).cast("string"))
-      )
-      .orderBy(col("__h"), col(idCol))
-      .limit(k)
-      .select(col(vecCol))
-      .collect()
-      .map(_.getSeq[Float](0).toSeq)
-      .toSeq
-    require(seeds.nonEmpty, "no non-null vectors to train on")
-    val dim = seeds.head.length
-    require(
-      dim % numSubspaces == 0,
-      s"vector width $dim is not divisible into $numSubspaces subspaces"
-    )
-    val sub = dim / numSubspaces
-    var codebooks: Seq[Seq[Seq[Float]]] = (0 until numSubspaces).map(s =>
-      seeds.map(_.slice(s * sub, (s + 1) * sub))
-    )
-    for (_ <- 1 to rounds) {
-      // one scan: per row, one (subspace, cluster, subvector) struct per
-      // subspace, then positions — total elements exploded = dim per row,
-      // exactly what one full-width k-means round explodes
-      val assignStructs = (0 until numSubspaces).map { s =>
-        val sv = slice(col(vecCol), s * sub + 1, sub)
-        struct(
-          lit(s).as("s"),
-          nearestCentroid(sv, codebooks(s)).getField("cluster").as("cl"),
-          sv.as("sv")
+    lloydTrain(df, idCol, vecCol, k, rounds, "no non-null vectors to train on") {
+      seeds =>
+        val dim = seeds.head.length
+        require(
+          dim % numSubspaces == 0,
+          s"vector width $dim is not divisible into $numSubspaces subspaces"
         )
-      }
-      val upd = src
-        .select(explode(array(assignStructs: _*)).as("__a"))
-        .select(
-          col("__a.s").as("__s"),
-          col("__a.cl").as("__cl"),
-          posexplode(col("__a.sv")).as(Seq("__pos", "__e"))
-        )
-        .groupBy("__s", "__cl", "__pos")
-        .agg(
-          sum(
-            floor(col("__e").cast("double") * lit(1000000.0))
-              .cast("decimal(38,0)")
-          ).as("__sum"),
-          count(lit(1)).as("__n"),
-          // non-null element count: sum() SKIPS nulls, so a mixed
-          // null/non-null position would otherwise average over too many
-          // rows silently — the count mismatch is the loud detector
-          count(col("__e")).as("__nn")
-        )
-        .collect()
-        .groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case ((s, cl), rows) =>
-          val v = new Array[Float](sub)
-          rows.foreach { r =>
-            require(
-              r.getLong(4) == r.getLong(5),
-              s"null embedding element in subspace $s cluster $cl dim " +
-                s"${r.getInt(2)} (${r.getLong(4) - r.getLong(5)} of " +
-                s"${r.getLong(4)} rows): PQ requires fully-populated " +
-                "vectors (null VECTORS are filtered; null ELEMENTS are " +
-                "data corruption)"
-            )
-            v(r.getInt(2)) =
-              (r.getDecimal(3).doubleValue() / 1000000.0 /
-                r.getLong(4).toLong.toDouble).toFloat
-          }
-          (s, cl) -> v.toSeq
-        }
-      codebooks = codebooks.zipWithIndex.map { case (cb, s) =>
-        cb.zipWithIndex.map { case (old, c) => upd.getOrElse((s, c), old) }
-      }
+        val sub = dim / numSubspaces
+        (Some(sub), (0 until numSubspaces).map(s =>
+          seeds.map(_.slice(s * sub, (s + 1) * sub))))
     }
-    codebooks
   }
 
   /** Encode vectors to PQ codes: `outCol` = array<int> of length
@@ -1720,5 +1674,127 @@ object Similarity {
       .parquet(path)
       .filter(col("cell").isin(cells.toIndexedSeq.map(Int.box): _*))
     ivfPqScore(index, idCol, probed, codebooks, k)
+  }
+}
+
+/** The exact centroid-sum state of one (codebook, cluster) key in
+  * [[Similarity]]'s Lloyd core: per vector position, the rows that reach
+  * it, its non-null elements and the exact sum of `floor(e * 1e6)` — a
+  * `long`, with what overflowed it banked in a `BigInteger`. Integer
+  * sums make the mean independent of row order and partitioning. */
+private[graft] final class CentroidSums extends Serializable {
+  private var rows = new Array[Long](0)
+  private var present = new Array[Long](0)
+  private var sums = new Array[Long](0)
+  private var carry = new Array[BigInteger](0)
+
+  def length: Int = rows.length
+
+  private def grow(n: Int): Unit = if (n > length) {
+    rows = java.util.Arrays.copyOf(rows, n)
+    present = java.util.Arrays.copyOf(present, n)
+    sums = java.util.Arrays.copyOf(sums, n)
+    carry = java.util.Arrays.copyOf(carry, n)
+  }
+
+  private def addCarry(p: Int, b: BigInteger): Unit =
+    carry(p) = if (carry(p) == null) b else carry(p).add(b)
+
+  private def addSum(p: Int, t: Long): Unit = {
+    val s = sums(p)
+    val r = s + t
+    // signed overflow: bank the old sum exactly, restart the long at t
+    if (((s ^ r) & (t ^ r)) < 0) { addCarry(p, BigInteger.valueOf(s)); sums(p) = t }
+    else sums(p) = r
+  }
+
+  /** Add elements `[from, until)` of `v` at positions `0 until until - from`. */
+  def add(v: ArrayData, from: Int, until: Int): Unit = {
+    grow(until - from)
+    var p = 0
+    while (p < until - from) {
+      rows(p) += 1
+      if (!v.isNullAt(from + p)) {
+        present(p) += 1
+        addSum(p, CentroidSums.micros(v.getFloat(from + p)))
+      }
+      p += 1
+    }
+  }
+
+  def merge(o: CentroidSums): CentroidSums = {
+    grow(o.length)
+    for (p <- 0 until o.length) {
+      rows(p) += o.rows(p)
+      present(p) += o.present(p)
+      addSum(p, o.sums(p))
+      if (o.carry(p) != null) addCarry(p, o.carry(p))
+    }
+    this
+  }
+
+  /** The mean `sum / 1e6 / rows` truncated to float, `width` wide
+    * (positions no row reached stay 0). A null element fails loudly: it
+    * is data corruption, not a value to average over. */
+  def centroid(width: Int, where: String, model: String): Seq[Float] = {
+    val v = new Array[Float](width)
+    for (p <- 0 until length) {
+      require(
+        rows(p) == present(p),
+        s"null embedding element in $where dim $p " +
+          s"(${rows(p) - present(p)} of ${rows(p)} rows): $model requires " +
+          "fully-populated vectors (null VECTORS are filtered; null " +
+          "ELEMENTS are data corruption)"
+      )
+      val total =
+        if (carry(p) == null) sums(p).toDouble
+        else carry(p).add(BigInteger.valueOf(sums(p))).doubleValue()
+      v(p) = (total / 1000000.0 / rows(p).toDouble).toFloat
+    }
+    v.toSeq
+  }
+}
+
+private[graft] object CentroidSums {
+
+  /** `floor(cast(e as double) * 1e6)` exactly as Spark's `floor` computes
+    * it: NaN is 0, out-of-range values saturate at the long bounds. */
+  def micros(e: Float): Long = math.floor(e.toDouble * 1000000.0).toLong
+
+  /** One pass over `assigned` = (array<int> cluster per codebook,
+    * array<float> vector): each row adds its piece of the vector for
+    * codebook s (all of it when `width` is None, else elements
+    * `[s*w, (s+1)*w)`) to key `s * k + cluster`. Partials combine per
+    * key on executors; the driver receives one [[CentroidSums]] per key
+    * that some non-empty piece reached. */
+  def perKey(
+      assigned: DataFrame,
+      k: Int,
+      books: Int,
+      width: Option[Int]
+  ): Map[Int, CentroidSums] = {
+    // no width means one codebook (s = 0) over the whole vector
+    val w = width.fold(Long.MaxValue)(_.toLong)
+    val partials = assigned.queryExecution.toRdd.mapPartitions { it =>
+      val acc = new Array[CentroidSums](books * k)
+      it.foreach { r =>
+        val cls = r.getArray(0)
+        val v = r.getArray(1)
+        val len = v.numElements()
+        for (s <- 0 until books) {
+          val from = s * w
+          if (from < len) {
+            val key = s * k + cls.getInt(s)
+            if (acc(key) == null) acc(key) = new CentroidSums
+            acc(key).add(v, from.toInt, math.min(from + w, len.toLong).toInt)
+          }
+        }
+      }
+      acc.indices.iterator.filter(acc(_) != null).map(key => key -> acc(key))
+    }
+    partials
+      .reduceByKey(_ merge _, math.min(books * k, partials.getNumPartitions))
+      .collect()
+      .toMap
   }
 }

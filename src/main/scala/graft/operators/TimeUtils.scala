@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
@@ -21,10 +21,6 @@ import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
   * convention DuckDB uses when reading the same file, so oracles agree.
   */
 object TimeUtils {
-
-  /** The column coerced to a session-zone TIMESTAMP instant. No-op for
-    * TIMESTAMP inputs (Catalyst's SimplifyCasts removes the cast). */
-  def asInstant(c: Column): Column = c.cast(TimestampType)
 
   /** Normalize the named event-time columns of `df` to TIMESTAMP at
     * operator entry. Unsupported types fail fast with the column NAMED —

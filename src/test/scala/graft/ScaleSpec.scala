@@ -3161,6 +3161,125 @@ class ScaleSpec extends SparkSpec {
     assert(tiny.length == 3)
   }
 
+  // The k-means update before the shared Lloyd core: posexplode the
+  // assigned vectors and sum floor(e * 1e6) as decimal(38,0) per (cluster,
+  // position). Kept here as the reference the exact map-side centroid sums
+  // must reproduce bit for bit; `width` pads updated centroids the way PQ
+  // does.
+  private def kmeansTrainReference(
+      df: org.apache.spark.sql.DataFrame,
+      k: Int,
+      rounds: Int,
+      width: Option[Int] = None
+  ): Seq[Seq[Float]] = {
+    val src = df.filter(col("vec").isNotNull)
+    var centroids: Seq[Seq[Float]] = src
+      .withColumn("__h", TextFunctions.md5Prefix60(col("id").cast("string")))
+      .orderBy(col("__h"), col("id"))
+      .limit(k)
+      .select(col("vec"))
+      .collect()
+      .map(_.getSeq[Float](0).toSeq)
+      .toSeq
+    for (_ <- 1 to rounds) {
+      val upd = src
+        .withColumn("__cl",
+          VectorFunctions.nearestCentroid(col("vec"), centroids).getField("cluster"))
+        .select(col("__cl"), posexplode(col("vec")).as(Seq("__pos", "__e")))
+        .groupBy(col("__cl"), col("__pos"))
+        .agg(
+          sum(floor(col("__e").cast("double") * lit(1000000.0)).cast("decimal(38,0)"))
+            .as("__s"),
+          count(lit(1)).as("__n"))
+        .collect()
+        .groupBy(_.getInt(0))
+        .map { case (cl, rows) =>
+          val v = new Array[Float](width.getOrElse(rows.map(_.getInt(1)).max + 1))
+          rows.foreach { r =>
+            v(r.getInt(1)) =
+              (r.getDecimal(2).doubleValue() / 1000000.0 / r.getLong(3).toDouble).toFloat
+          }
+          cl -> v.toSeq
+        }
+      centroids = centroids.zipWithIndex.map { case (old, c) => upd.getOrElse(c, old) }
+    }
+    centroids
+  }
+
+  test("k-means and PQ centroid sums equal the posexplode + decimal update") {
+    // the floor(e * 1e6) term matches Spark's floor(double) -> long,
+    // NaN and saturation included
+    val specials = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity,
+      Float.MaxValue, -Float.MaxValue, Float.MinPositiveValue,
+      -Float.MinPositiveValue, 0.0f, -0.0f, 1e-7f, -1e-7f, 0.1f, -2.5e-6f,
+      123.456f, 1e13f, -1e13f)
+    val sparkFloors = specials.zipWithIndex.toDF("e", "i")
+      .select(col("i"), floor(col("e").cast("double") * lit(1000000.0)))
+      .collect()
+      .map(r => r.getInt(0) -> r.getLong(1))
+      .toMap
+    specials.zipWithIndex.foreach { case (e, i) =>
+      assert(graft.operators.CentroidSums.micros(e) == sparkFloors(i), s"floor term of $e")
+    }
+    // ragged lengths (2, 4, 6) and negative values, over 4 partitions; the
+    // four identical huge rows share a cluster and each saturates
+    // floor(e * 1e6) at a long bound, so two of them overflow a long sum:
+    // inside the first and the last partition (rows 2, 3 and 30, 31), and
+    // again where those two partials merge
+    val huge = Seq(1e13f, -2e13f, 3e13f, 1.0f)
+    val rows = (0 until 32).map { i =>
+      val v =
+        if (Set(2, 3, 30, 31).contains(i)) huge
+        else if (i % 2 == 0) Seq.tabulate(2 + 2 * (i % 3))(d => 1.0f + 0.1f * d + 0.01f * i)
+        else Seq.tabulate(2 + 2 * (i % 3))(d => -5.0f - 0.3f * d + 0.02f * i)
+      (i.toLong, v)
+    }
+    val df = spark.sparkContext.parallelize(rows, 4).toDF("id", "vec")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val km = Similarity.kmeansTrain(df, "id", "vec", k = 3, rounds = 2)
+    assert(km == kmeansTrainReference(df, 3, 2))
+    // the planted cases held: round 2 put the huge rows in one cluster and
+    // rows of different lengths in a shared cluster
+    val round2 = Similarity
+      .kmeansAssign(df, "vec", kmeansTrainReference(df, 3, 1))
+      .select(col("id"), size(col("vec")), col("cluster"))
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+    assert(Set(2L, 3L, 30L, 31L).map(id => round2.find(_._1 == id).get._3).size == 1)
+    assert(round2.groupBy(_._3).values.exists(_.map(_._2).distinct.length > 1))
+    // PQ subspace s is the reference k-means over slice s
+    val pq = Similarity.pqTrain(df, "id", "vec", numSubspaces = 2, k = 3, rounds = 2)
+    val sub = pq.head.head.length
+    pq.zipWithIndex.foreach { case (book, s) =>
+      val sliced = df.select(col("id"), slice(col("vec"), s * sub + 1, sub).as("vec"))
+      assert(book == kmeansTrainReference(sliced, 3, 2, Some(sub)), s"subspace $s")
+    }
+    assert(sc.getPersistentRDDs.keySet == before, "training must release its input")
+  }
+
+  test("kmeansTrain rejects a null embedding element and releases its input") {
+    // a MIXED null/non-null element position must fail loudly, not bias
+    // the centroid mean
+    val dirty = Seq(
+      (1L, Seq(1.0f, 2.0f, 3.0f, 4.0f)),
+      (2L, Seq(1.0f, 2.0f, 3.0f, 4.0f))
+    ).toDF("vec_id", "embedding")
+      .union(
+        Seq(3L).toDF("vec_id").select(
+          col("vec_id"),
+          array(lit(1.0f), lit(null).cast("float"), lit(3.0f), lit(4.0f))
+            .as("embedding")
+        )
+      )
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.kmeansTrain(dirty, "vec_id", "embedding", k = 1, rounds = 1)
+    }
+    assert(ex.getMessage.contains("null embedding element in cluster 0 dim 1"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("semDeDup keeps the centroid-farthest (or closest) member per pair") {
     // colinear trio (cosine 1.0 pairwise, distinct centroid distances)
     // plus one orthogonal singleton that must always survive
