@@ -23,17 +23,7 @@ private[operators] object BloomUtils {
       expected: Long,
       fpp: Double,
       probeHash: Column
-  ): Column =
-    probeOf(filterBytes(hashes, expected, fpp), probeHash)
-
-  /** Build step alone: the serialized filter bytes, for callers that
-    * probe the SAME filter with more than one expression (e.g. a lambda
-    * variable inside `exists()` on a streaming gate). */
-  def filterBytes(
-      hashes: DataFrame,
-      expected: Long,
-      fpp: Double
-  ): Array[Byte] = {
+  ): Column = {
     val bf = hashes.stat.bloomFilter("__h", expected, fpp)
     // a caller-supplied `expected` that grossly undercounts the true key
     // cardinality stays EXACT (the semi-join behind the probe removes
@@ -52,17 +42,12 @@ private[operators] object BloomUtils {
     }
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** Probe step alone: the native codegen'd membership test of
-    * `probeHash` against a pre-built filter. */
-  def probeOf(bytes: Array[Byte], probeHash: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         org.apache.spark.sql.catalyst.expressions.Literal
-          .create(bytes, org.apache.spark.sql.types.BinaryType),
+          .create(bos.toByteArray, org.apache.spark.sql.types.BinaryType),
         org.apache.spark.sql.GraftSqlBridge.expression(probeHash)
       )
     )
+  }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Train/test decontamination: find (and drop) training documents that
@@ -161,35 +161,6 @@ object Decontam {
     * keyed by xxhash64 on BOTH the build and probe sides (the native
     * probe tests 64-bit keys), which adds only a ~n/2^64 hash-collision
     * term to fpp and keeps the no-false-negative guarantee. */
-  /** Build-once Bloom contamination probe over the eval set's distinct
-    * n-grams — shared by [[bloomDecontaminate]] and the streaming gate
-    * (`Streaming.decontaminateStreamBloom`). Returns a function wrapping
-    * ANY gram Column (including a lambda variable inside `exists()`) in
-    * the native codegen'd membership test against the one driver-built,
-    * fixed-size filter; None when the eval set has no grams. */
-  private[graft] def bloomContaminationProbe(
-      test: DataFrame,
-      textCol: String,
-      n: Int,
-      fpp: Double
-  ): Option[Column => Column] = {
-    require(n >= 1, "n-gram size must be >= 1")
-    require(fpp > 0 && fpp < 1, "fpp must be in (0, 1)")
-    val grams = test
-      .select(explode(shingles(col(textCol), n)).as("__gram"))
-      .distinct()
-    val numGrams = grams.count()
-    if (numGrams == 0) None
-    else {
-      val bytes = BloomUtils.filterBytes(
-        grams.select(xxhash64(col("__gram")).as("__h")),
-        numGrams,
-        fpp
-      )
-      Some(g => BloomUtils.probeOf(bytes, xxhash64(g)))
-    }
-  }
-
   def bloomDecontaminate(
       train: DataFrame,
       test: DataFrame,

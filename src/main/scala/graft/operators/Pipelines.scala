@@ -51,18 +51,12 @@ object Pipelines {
       .qualityScore(repaired, "text")
       .filter(col("quality") >= minQuality)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val out = Dedup.dedupNearMinHashVerified(
+    Dedup.dedupNearMinHashVerified(
       gated, idCol, "text",
       threshold = dedupThreshold,
       shingleK = shingleK,
       numHashes = numHashes,
       bands = bands
     )
-    // surface any WARC-ingest losses feeding this curate (one log line;
-    // counts are session-cumulative as of the actions run so far — dedup's
-    // eager loser materialization has already executed the ingest scan by
-    // this point when the pages came from readWarc/cdxjGatedFetch)
-    graft.sources.Warc.logSkipReport(pages.sparkSession, "crawlCurate")
-    out
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Event-time operators over the batch `events` table: gap sessionization,
-  * tumbling windows, as-of (last-prior-event) joins (north-star extension;
-  * the streaming-shaped counterparts live in `graft.streaming`).
+  * tumbling windows, as-of (last-prior-event) joins (north-star
+  * extension).
   *
   * Scale notes: every operator here shuffles exactly once, on `user_id`
   * (sessionize/as-of windows) or the window-start key (tumbling agg) — the

@@ -1773,9 +1773,8 @@ object Stats {
   }
   /** The batch-trained model under [[madOutliers]]: one row per group
     * with its exact median (`med`) and median absolute deviation (`mad`).
-    * Persist or broadcast it to score OTHER data — including a stream
-    * ([[graft.streaming.Streaming.anomalyGateStream]]) — against the
-    * batch baseline without recomputing medians. */
+    * Persist or broadcast it to score OTHER data against the batch
+    * baseline without recomputing medians. */
   def madModel(
       df: DataFrame,
       valueCol: String,

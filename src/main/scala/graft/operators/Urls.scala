@@ -206,45 +206,6 @@ object Urls {
     )
   }
 
-  /** Driver/executor-side mirror of [[surtKey]] for writers that know a
-    * record's URL as a plain String at write time (the CDXJ emission in
-    * `sources.Warc.writeWarc` — a Column can't run there). Uses the SAME
-    * regex constants, so the two stay equal by construction; a parity
-    * unit sweeps the synthetic URL corpus over both. */
-  private[graft] def surtKeyScala(url: String): Option[String] = {
-    if (url == null) return None
-    def ext(re: String): Option[String] = {
-      val m = java.util.regex.Pattern.compile(re).matcher(url)
-      if (m.find() && m.group(1) != null && m.group(1).nonEmpty)
-        Some(m.group(1))
-      else None
-    }
-    val scheme = ext(SchemeRe).map(_.toLowerCase)
-    val host = ext(HostRe)
-      .map(_.toLowerCase.replaceFirst("^www\\.", ""))
-      .filter(_.nonEmpty)
-    host.map { h =>
-      val hostKey =
-        if (h.matches(IpHostRe)) h
-        // limit -1 keeps trailing empty labels (a trailing-dot FQDN like
-        // "example.com." → ",com,example"), matching Spark's split()
-        // semantics in the surtKey column — limit 0 would drop them and
-        // break the by-construction parity
-        else h.split("\\.", -1).reverse.mkString(",")
-      val port = ext(PortRe).flatMap(_.toIntOption)
-      val defaultPort = port.exists(p =>
-        (scheme.contains("http") && p == 80) ||
-          (scheme.contains("https") && p == 443))
-      val portPart =
-        port.filterNot(_ => defaultPort).map(p => s":$p").getOrElse("")
-      val path = ext(PathRe).getOrElse("/")
-      val queryPart = ext(QueryRe)
-        .map(q => "?" + q.split("&", -1).sorted.mkString("&"))
-        .getOrElse("")
-      hostKey + portPart + ")" + path + queryPart
-    }
-  }
-
   /** [[surtKey]] as a new column over a URL column. */
   def withSurtKey(
       df: DataFrame,

@@ -8,163 +8,29 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Charset-aware HTML payload decoding and mojibake repair.
+/** Mojibake repair: undo text that was UTF-8 but got decoded as a legacy
+  * charset somewhere upstream.
   *
-  * Real crawls are ~20-30% legacy encodings (windows-1252, GBK, Shift_JIS,
-  * EUC-KR, …); decoding every body as UTF-8-with-replacement mojibakes
-  * those pages, and every downstream operator (langId, quality scoring,
-  * dedup shingles) then degrades silently for the wrong reason. These are
-  * custom Catalyst expressions (extension tier (b): built-ins can't express
-  * it — Spark's `decode` rejects non-Unicode charsets without a legacy flag
-  * and ERRORS on malformed bytes, where crawl practice is replace-and-move-
-  * on) with tight static-helper codegen, so the hot path stays inside
-  * whole-stage codegen like the rest of the crawl tier.
-  *
-  * Charset resolution follows browser/WHATWG practice (documented subset):
-  *   1. a byte-order mark is authoritative (UTF-8 / UTF-32LE / UTF-32BE /
-  *      UTF-16LE / UTF-16BE — the 4-byte UTF-32 marks checked before the
-  *      2-byte UTF-16 ones they contain; stripped from the output);
-  *   2. the `charset` parameter of the HTTP `Content-Type` header;
-  *   3. a `<meta charset=…>` / `http-equiv Content-Type` sniff over the
-  *      first 2048 bytes;
-  *   4. UTF-8.
-  * Declared `ISO-8859-1` / `US-ASCII` / `latin1` map to windows-1252 (the
-  * WHATWG alias rule — real pages labeled latin-1 use the cp1252
-  * 0x80-0x9F range). Unknown/unsupported names fall through to the next
-  * tier. One mislabel guard: when the resolved charset is single-byte but
-  * the body is strictly valid UTF-8 with at least one non-ASCII byte, the
-  * body IS UTF-8 (a single-byte read of it would be mojibake) and is
-  * decoded as such. All decodes replace malformed/unmappable sequences.
+  * Real crawls carry many pages in legacy encodings (windows-1252, GBK,
+  * Shift_JIS, …), and a decoder that guessed wrong leaves double-encoded
+  * text ("Ã©" for "é"). Every downstream operator (langId, quality
+  * scoring, dedup shingles) then degrades silently for the wrong reason.
+  * [[FixEncodingExpr]] is a custom Catalyst expression (extension tier
+  * (b): no built-in inverts a misread) with tight static-helper codegen,
+  * so the hot path stays inside whole-stage codegen like the rest of the
+  * crawl tier. See [[EncodingUtils.fixEncoding]] for the repair rules.
   */
 object EncodingUtils {
 
-  /** WHATWG-style aliases that mean windows-1252 on the real web. */
-  private val Cp1252Aliases: java.util.Set[String] = {
-    val s = new java.util.HashSet[String]()
-    Seq(
-      "iso-8859-1", "iso8859-1", "iso_8859-1", "iso88591", "8859-1",
-      "latin1", "latin-1", "l1", "cp819", "ibm819",
-      "us-ascii", "ascii", "ansi_x3.4-1968",
-      "windows-1252", "cp1252", "x-cp1252"
-    ).foreach(s.add)
-    s
-  }
-
-  private val HeaderCharsetRe = java.util.regex.Pattern.compile(
-    "(?i)charset\\s*=\\s*[\"']?\\s*([A-Za-z0-9._:+-]+)")
-
-  // covers <meta charset="…"> AND <meta http-equiv=Content-Type
-  // content="text/html; charset=…"> — both reduce to a charset= attribute
-  // inside a meta tag
-  private val MetaCharsetRe = java.util.regex.Pattern.compile(
-    "(?i)<meta[^>]{0,512}?charset\\s*=\\s*[\"']?\\s*([A-Za-z0-9._:+-]+)")
-
-  private def lookupCharset(name: String): Charset = {
-    if (name == null) return null
-    val n = name.trim.toLowerCase
-    if (n.isEmpty) return null
-    if (Cp1252Aliases.contains(n)) return Charset.forName("windows-1252")
-    try { if (Charset.isSupported(n)) Charset.forName(n) else null }
-    catch { case _: Exception => null }
-  }
-
-  /** Charset from an HTTP Content-Type header value, null when absent or
-    * unsupported. */
-  private[graft] def charsetFromContentType(ct: String): Charset = {
-    if (ct == null) return null
-    val m = HeaderCharsetRe.matcher(ct)
-    if (m.find()) lookupCharset(m.group(1)) else null
-  }
-
-  /** Charset from a meta tag in the first 2048 bytes (sniffed through a
-    * latin-1 view — charset names are ASCII), null when absent. */
-  private[graft] def metaCharset(body: Array[Byte], off: Int): Charset = {
-    val n = math.min(body.length - off, 2048)
-    if (n <= 0) return null
-    val head = new String(body, off, n, StandardCharsets.ISO_8859_1)
-    val m = MetaCharsetRe.matcher(head)
-    if (m.find()) lookupCharset(m.group(1)) else null
-  }
-
-  private def isSingleByte(cs: Charset): Boolean =
-    try cs.canEncode && cs.newEncoder().maxBytesPerChar() == 1.0f
-    catch { case _: Exception => false }
-
-  private def hasNonAscii(b: Array[Byte], off: Int): Boolean = {
-    var i = off
-    while (i < b.length) {
-      if ((b(i) & 0x80) != 0) return true
-      i += 1
-    }
-    false
-  }
-
   /** Strict UTF-8 decode; null when any sequence is malformed. */
-  private def strictUtf8(b: Array[Byte], off: Int): String = {
+  private def strictUtf8(b: Array[Byte]): String = {
     val dec = StandardCharsets.UTF_8
       .newDecoder()
       .onMalformedInput(CodingErrorAction.REPORT)
       .onUnmappableCharacter(CodingErrorAction.REPORT)
-    try dec.decode(java.nio.ByteBuffer.wrap(b, off, b.length - off)).toString
+    try dec.decode(java.nio.ByteBuffer.wrap(b)).toString
     catch { case _: java.nio.charset.CharacterCodingException => null }
   }
-
-  private def replaceDecode(b: Array[Byte], off: Int, cs: Charset): String = {
-    val dec = cs
-      .newDecoder()
-      .onMalformedInput(CodingErrorAction.REPLACE)
-      .onUnmappableCharacter(CodingErrorAction.REPLACE)
-    try dec.decode(java.nio.ByteBuffer.wrap(b, off, b.length - off)).toString
-    catch {
-      // a pathological decoder failure must degrade to the old behavior,
-      // never fail the row
-      case _: Exception =>
-        new String(b, off, b.length - off, StandardCharsets.UTF_8)
-    }
-  }
-
-  /** The [[DecodeHtmlExpr]] kernel — see the object doc for the
-    * resolution order. `headerCt` is the HTTP Content-Type value ("" when
-    * absent). */
-  def decodeHtml(body: Array[Byte], headerCt: UTF8String): UTF8String = {
-    if (body == null) return null
-    var off = 0
-    var cs: Charset = null
-    if (body.length >= 3 && (body(0) & 0xff) == 0xEF &&
-        (body(1) & 0xff) == 0xBB && (body(2) & 0xff) == 0xBF) {
-      cs = StandardCharsets.UTF_8; off = 3
-    } else if (body.length >= 4 && (body(0) & 0xff) == 0xFF &&
-        (body(1) & 0xff) == 0xFE && body(2) == 0 && body(3) == 0) {
-      // the 4-byte UTF-32 BOMs MUST be ruled out before the 2-byte UTF-16
-      // ones: FF FE 00 00 starts with the UTF-16LE mark, and a UTF-16LE
-      // read of a UTF-32LE body is NUL-interleaved mojibake
-      cs = Charset.forName("UTF-32LE"); off = 4
-    } else if (body.length >= 4 && body(0) == 0 && body(1) == 0 &&
-        (body(2) & 0xff) == 0xFE && (body(3) & 0xff) == 0xFF) {
-      cs = Charset.forName("UTF-32BE"); off = 4
-    } else if (body.length >= 2 && (body(0) & 0xff) == 0xFF &&
-        (body(1) & 0xff) == 0xFE) {
-      cs = StandardCharsets.UTF_16LE; off = 2
-    } else if (body.length >= 2 && (body(0) & 0xff) == 0xFE &&
-        (body(1) & 0xff) == 0xFF) {
-      cs = StandardCharsets.UTF_16BE; off = 2
-    }
-    if (cs == null && headerCt != null)
-      cs = charsetFromContentType(headerCt.toString)
-    if (cs == null) cs = metaCharset(body, off)
-    if (cs == null) cs = StandardCharsets.UTF_8
-    // mislabel guard: a strictly-valid-UTF-8 body with non-ASCII bytes
-    // declared as a single-byte charset IS UTF-8 (the single-byte read
-    // would be the mojibake)
-    if (!(cs eq StandardCharsets.UTF_8) && isSingleByte(cs) &&
-        hasNonAscii(body, off)) {
-      val asUtf8 = strictUtf8(body, off)
-      if (asUtf8 != null) return UTF8String.fromString(asUtf8)
-    }
-    UTF8String.fromString(replaceDecode(body, off, cs))
-  }
-
-  // ===== mojibake repair (ftfy-lite) =====
 
   /** windows-1252 byte→char table (identical to latin-1 outside
     * 0x80-0x9F; Java maps the five undefined cp1252 positions to the C1
@@ -288,7 +154,7 @@ object EncodingUtils {
   private def tryCjkInverse(s: String, cs: Charset): String = {
     val bytes = inverseBytes(s, cs)
     if (bytes == null) return null
-    val dec = strictUtf8(bytes, 0)
+    val dec = strictUtf8(bytes)
     if (dec != null && dec != s && dec.length < s.length) dec else null
   }
 
@@ -322,7 +188,7 @@ object EncodingUtils {
       var dec: String = null
       if (hasMojibakePair(s)) {
         val bytes = inverseSingleByte(s)
-        if (bytes != null) dec = strictUtf8(bytes, 0)
+        if (bytes != null) dec = strictUtf8(bytes)
       }
       if ((dec == null || dec == s) && s.length >= 8 && hasCjkChar(s)) {
         dec = tryCjkInverse(s, GbkCharset)
@@ -337,44 +203,6 @@ object EncodingUtils {
     }
     if (changed) UTF8String.fromString(s) else u
   }
-}
-
-/** Charset-aware HTML decode as a codegen'd expression:
-  * `decode_html(body BINARY, http_content_type STRING) -> STRING`. See
-  * [[EncodingUtils]] for the resolution order. NULL body → NULL; pass ""
-  * for an absent header. */
-case class DecodeHtmlExpr(left: Expression, right: Expression)
-    extends BinaryExpression
-    with Serializable {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"decode_html expects (binary, string) inputs, got ($l, $r)"
-        )
-    }
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(body: Any, ct: Any): Any =
-    EncodingUtils.decodeHtml(
-      body.asInstanceOf[Array[Byte]],
-      ct.asInstanceOf[UTF8String]
-    )
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, ct) => {
-      s"${ev.value} = graft.plans.EncodingUtils.decodeHtml($b, $ct);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression,
-      newRight: Expression
-  ): Expression = copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "decode_html"
 }
 
 /** Mojibake repair as a codegen'd expression:

@@ -396,13 +396,6 @@ private[graft] object QueryShared {
     "replace(replace(replace(text, 'a', chr(233)), 'o', chr(246)), " +
       "'u', chr(8217))"
 
-  /** [[syntheticMojibakeText]] as DuckDB SQL. */
-  val duckSyntheticMojibakeText: String =
-    s"replace(replace(replace($duckSyntheticAccentedText, " +
-      "chr(233), chr(195) || chr(169)), " +
-      "chr(246), chr(195) || chr(182)), " +
-      "chr(8217), chr(226) || chr(8364) || chr(8482))"
-
   /** Planted CJK originals for the q_fix_encoding CJK tiers — chosen so
     * their UTF-8 bytes decode LOSSLESSLY under the misread charset (a
     * misread that hits an unassigned code point would replace bytes with

@@ -3,6 +3,26 @@ package graft
 /** Driver-contract smoke: entry() returns rows; every query has an oracle. */
 class EntrySpec extends SparkSpec {
 
+  private def canon(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
+    rows.map(_.toString).sorted.toSeq
+
+  private def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${e.getMessage}"
+
+  /** Every query's canonical rows on sf0.001 with ANSI off, run once and
+    * shared by the ANSI test and the coverage test. A query that throws
+    * keeps its exception under its name, so each test fails naming it. */
+  private lazy val defaultResults: Map[String, Either[Throwable, Seq[String]]] = {
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        name -> (try Right(canon(fn(spark, sfDir).collect()))
+        catch { case e: Throwable => Left(e) })
+      }.toMap
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
   test("entry returns >0 rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -34,20 +54,19 @@ class EntrySpec extends SparkSpec {
     // and produce VALUE-identical results, not just the same cardinality —
     // a silent ANSI-mode value drift (e.g. a different cast result) would
     // pass a count check and still fail the driver's hash gate.
-    def canon(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
-      rows.map(_.toString).sorted.toSeq
+    val base = defaultResults.toSeq.sortBy(_._1).map {
+      case (name, Right(rows)) => name -> rows
+      case (name, Left(e)) => fail(s"$name fails with default settings: ${describe(e)}", e)
+    }
     val prev = spark.conf.get("spark.sql.ansi.enabled")
     try {
-      val base = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> canon(fn(spark, sfDir).collect())
-      }
       spark.conf.set("spark.sql.ansi.enabled", "true")
       base.foreach { case (name, expected) =>
         val got =
           try canon(SparkEntry.queries(name)(spark, sfDir).collect())
           catch {
             case e: Throwable =>
-              fail(s"$name fails under ANSI mode: ${e.getClass.getSimpleName}: ${e.getMessage}")
+              fail(s"$name fails under ANSI mode: ${describe(e)}")
           }
         assert(got.size == expected.size,
           s"$name row count diverges under ANSI: ${got.size} vs ${expected.size}")
@@ -85,16 +104,13 @@ class EntrySpec extends SparkSpec {
       "nanos" -> variantDir("nanos",
         canonical.withColumn("ts", unix_micros(col("ts")) * 1000L))
     )
-    def canon(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
-      rows.map(_.toString).sorted.toSeq
     eventQueries.foreach { name =>
       val results = dirs.map { case (variant, dir) =>
         val got =
           try canon(SparkEntry.queries(name)(spark, dir).collect())
           catch {
             case e: Throwable =>
-              fail(s"$name fails on the $variant timestamp variant: " +
-                s"${e.getClass.getSimpleName}: ${e.getMessage}")
+              fail(s"$name fails on the $variant timestamp variant: ${describe(e)}")
           }
         variant -> got
       }
@@ -115,9 +131,11 @@ class EntrySpec extends SparkSpec {
     // queries without oracle are allowed (weaker rows-only check) but listed:
     if (missingOracle.nonEmpty)
       info(s"rows-only queries (no oracle): ${missingOracle.toSeq.sorted.mkString(", ")}")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
-      assert(n >= 0, s"$name failed")
+    assert(defaultResults.keySet == SparkEntry.queries.keySet,
+      s"default-settings pass missed: ${SparkEntry.queries.keySet -- defaultResults.keySet}")
+    defaultResults.toSeq.sortBy(_._1).foreach {
+      case (name, Left(e)) => fail(s"$name failed: ${describe(e)}", e)
+      case (name, Right(rows)) => assert(rows.size >= 0, s"$name failed")
     }
   }
 }

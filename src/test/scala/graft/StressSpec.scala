@@ -170,51 +170,6 @@ class StressSpec extends SparkSpec {
       s"extra: ${(survivors -- orig).take(5)}; lost: ${(orig -- survivors).take(5)}")
   }
 
-  test("WARC ingest at scale: ~100k-record multi-shard corpus streams record-at-a-time (opt-in)") {
-    // the crawl tier's first stage under load: write the 20x corpus
-    // (~100k records, ~16 per-record-member gzip shards — the CC layout)
-    // with the distributed writer, then read it back through the per-file
-    // FileSystem streaming reader. Asserts count parity and a sampled
-    // content join; memory-boundedness is structural (one record per task
-    // in flight) — this measures the throughput and proves the pipeline
-    // at a scale where a whole-file buffer would hold ~60 MB/task.
-    // Opt in with SPARK_GRAFT_STRESS_100X=1; figures in PERFORMANCE.md.
-    assume(
-      sys.env.contains("SPARK_GRAFT_STRESS_100X"),
-      "set SPARK_GRAFT_STRESS_100X=1 to run the WARC ingest stress"
-    )
-    import graft.sources.Warc
-    val big = Stress
-      .selfUnionSkewed(origDocs, "doc_id", 20, stride)
-      .filter(col("text").isNotNull)
-      .select(
-        concat(lit("https://corpus.test/doc/"), col("doc_id")).as("url"),
-        encode(col("text"), "UTF-8").as("body")
-      )
-      .localCheckpoint()
-    val expected = big.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-stress").toString
-    val manifest = timed(s"writeWarc $expected records / 16 shards") {
-      Warc.writeWarc(big.repartition(16), dir).localCheckpoint()
-    }
-    assert(manifest.count() == 16)
-    assert(manifest.agg(sum("n_records")).head().getLong(0) == expected)
-    val back = timed(s"readWarc over 16 gz shards ($expected records)") {
-      Warc.readWarc(spark, s"$dir/*.warc.gz").localCheckpoint()
-    }
-    assert(back.count() == expected)
-    // sampled content parity: 1/997 of records join back to their source
-    // row by uri and must carry identical bytes
-    val sample = back
-      .filter(xxhash64(col("target_uri")) % 997 === 0)
-      .select(col("target_uri").as("url"), decode(col("body"), "UTF-8").as("got"))
-    val src = big.select(col("url"), decode(col("body"), "UTF-8").as("want"))
-    val joined = sample.join(src, Seq("url"))
-    assert(joined.count() == sample.count())
-    assert(joined.filter(col("got") =!= col("want")).count() == 0)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("minhash dedup survivors on the 10x corpus equal the original corpus survivors") {
     val orig = timed("dedupNearMinHash on the original corpus") {
       Dedup
