@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * can be oracle-checked bit-for-bit. md5 hex is ASCII, so lexicographic
   * `array_min` ordering agrees across engines too. The hot digests run as
   * native codegen'd expressions (graft.plans), where md5 measured no slower
-  * than a non-portable xxhash64 (PERFORMANCE.md, round 6).
+  * than a non-portable xxhash64 (PERFORMANCE.md, round 6); a MinHash
+  * signature is one such per-row kernel over the shingle array
+  * ([[minHashOfShingles]]), not an explode into a per-component aggregate.
   */
 object TextFunctions {
 
@@ -57,30 +59,23 @@ object TextFunctions {
       )
     )
 
-  /** Per-shingle hash seeds for MinHash: ONE md5 digest per shingle, split
-    * into two 60-bit integers (a, b mod p). All signature components derive
-    * from (a, b) arithmetically — 16x fewer digests than hashing per
-    * component, and still engine-portable (DuckDB: CAST('0x'||substr AS
-    * BIGINT)). Keep this in its own projection: the expression is
-    * non-cheap, so Catalyst will NOT inline it into each downstream
-    * reference (CollapseProject skips duplicating expensive exprs). */
-  def minHashPre(shinglesCol: Column): Column =
-    transform(
-      shinglesCol,
-      s =>
-        // ONE digest per shingle via the native expression; the composed
-        // two-conv spec form below is asserted bit-identical in ScaleSpec
-        org.apache.spark.sql.GraftSqlBridge.column(
-          graft.plans.MinHashSeedsExpr(
-            org.apache.spark.sql.GraftSqlBridge.expression(s),
-            MinHashMod
-          )
-        )
+  /** MinHash signature of a shingle array (`graft.plans.MinHashSignatureExpr`):
+    * ONE md5 per shingle split into two engine-portable 60-bit seeds
+    * (a, b mod p; DuckDB: CAST('0x'||substr AS BIGINT)), component j the
+    * minimum of `(a + j*b) mod p`. NULL for a NULL or empty array. */
+  private[graft] def minHashOfShingles(shinglesCol: Column, numHashes: Int): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(
+      graft.plans.MinHashSignatureExpr(
+        org.apache.spark.sql.GraftSqlBridge.expression(shinglesCol),
+        numHashes,
+        MinHashMod
+      )
     )
 
-  /** Executable spec for [[minHashPre]]: the composed conv(substring(md5))
-    * form the native expression must match bit-for-bit (and the form the
-    * DuckDB oracles replicate). Kept for the identity test only. */
+  /** Executable spec for the (a, b) seeds of [[minHashOfShingles]]: the
+    * composed conv(substring(md5)) form the native kernel must match
+    * bit-for-bit (and the form the DuckDB oracles replicate). Kept for the
+    * identity test only. */
   private[graft] def minHashPreSpec(shinglesCol: Column): Column =
     transform(
       shinglesCol,

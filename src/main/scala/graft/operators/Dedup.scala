@@ -13,11 +13,11 @@ import org.apache.spark.storage.StorageLevel
   * Scale design:
   *   - Exact dedup is one hash shuffle on the key columns with a streaming
   *     row_number top-1 (`WindowGroupLimit` keeps it memory-bounded).
-  *   - MinHash signatures/bands are computed per-row with higher-order
-  *     functions — zero shuffle until the band join. Candidate generation
-  *     shuffles only (bandKey, id, signature) pairs, never the documents:
-  *     at 100 TB the band join moves ~B small rows per doc, and the final
-  *     anti-join is a semi shuffle on the id column.
+  *   - MinHash signatures are computed per row by one native kernel, and
+  *     bands by per-row expressions — zero shuffle until the band join.
+  *     Candidate generation shuffles only (bandKey, id, signature) pairs,
+  *     never the documents: at 100 TB the band join moves ~B small rows
+  *     per doc, and the final anti-join is a semi shuffle on the id column.
   *   - Verification (signature agreement / exact Jaccard) happens only on
   *     in-bucket candidate pairs, the standard LSH cost model.
   */
@@ -79,14 +79,18 @@ object Dedup {
     )
   }
 
-  /** MinHash signature table (__id, __sig array) computed as
-    * explode-shingles -> codegen'd hash aggregate with one `min` column per
-    * signature component. This stays fully inside whole-stage codegen
-    * (numHashes tiny arithmetic mins per shingle), unlike the nested
-    * higher-order-function formulation which is interpreted per lambda call
-    * — ~30x faster on corpus-sized inputs. Map-side partial aggregation
-    * absorbs the explode before any shuffle. Docs with zero shingles drop
-    * out (they can never be duplicates of anything).
+  /** MinHash signature table (__id, __sig array): one row per input row
+    * whose text has at least one shingle, its signature computed by the
+    * per-row native kernel [[graft.functions.TextFunctions.minHashOfShingles]]
+    * (one md5 per shingle, `numHashes` running minimums) — a projection
+    * over the scan, with no exploded shingle rows, no aggregate and no
+    * shuffle. Rows with NULL text or fewer than `shingleK` tokens drop out
+    * (they can never be duplicates of anything).
+    *
+    * Row key contract: the output has ONE row per input row, keyed by the
+    * row's `idCol` value as it stands — rows sharing an id are NOT merged
+    * into one signature (as the DuckDB oracle's per-row signature CTE).
+    * Every consumer in this library passes uniquely keyed rows.
     */
   def minHashSignatures(
       df: DataFrame,
@@ -97,12 +101,18 @@ object Dedup {
   ): DataFrame = {
     // per-shingle digests are per-row expensive: spread a narrow-split
     // scan across cores (no-op at real scale — ScanUtils contract; the
-    // signature aggregate is keyed by id, so row order is irrelevant)
-    val exploded = ScanUtils.withScanParallelism(df).select(
-      col(idCol).as("__id"),
-      explode(shingles(col(textCol), shingleK)).as("__s")
-    )
-    sigsFromShingleTable(exploded, numHashes)
+    // output is per row, so row order is irrelevant). The shingle test
+    // reads the text, not the signature: a filter on `__sig` would be
+    // pushed below the projection and digest every shingle twice.
+    val hasShingles =
+      if (shingleK == 1) col(textCol).isNotNull // split never yields []
+      else size(tokens(col(textCol))) >= shingleK
+    ScanUtils.withScanParallelism(df)
+      .filter(hasShingles)
+      .select(
+        col(idCol).as("__id"),
+        minHashOfShingles(shingles(col(textCol), shingleK), numHashes).as("__sig")
+      )
   }
 
   /** Candidate near-duplicate pairs (idA < idB) via MinHash + LSH banding,
@@ -359,8 +369,9 @@ object Dedup {
       bands: Int = 4,
       transitive: Boolean = false
   ): DataFrame = {
-    // ONE signature computation feeds both passes (shingle + md5 over the
-    // corpus is the dominant cost at scale — never pay it twice)
+    // ONE signature projection feeds both passes: the held table is
+    // scanned by the exact and banding passes instead of re-shingling and
+    // re-digesting the corpus (the dominant cost at scale) per consumer
     val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes)
     val losers = materialize(sigs) {
       minHashLosers(sigs, threshold, numHashes, bands, transitive).distinct()
@@ -590,8 +601,9 @@ object Dedup {
     * intersection counts keyed by the 16-byte shingle md5 (never the
     * string — a 5-word shingle is ~3x wider), the
     * [[TextAnalysis.spanDedup]] digest-exactness convention. Signatures
-    * come from exploding the same cached set table (min() is idempotent,
-    * so they equal [[minHashSignatures]]' over the raw shingle stream). */
+    * come from the same per-row kernel over the cached set table (a
+    * minimum ignores repeats, so the distinct set's signature equals
+    * [[minHashSignatures]]' over the raw shingle stream). */
   private[graft] def minHashVerifiedPairsPlan(
       sets: DataFrame,
       threshold: Double,
@@ -600,7 +612,9 @@ object Dedup {
   ): DataFrame = {
     val thrPpm = math.round(threshold * 1e6)
     val exploded = sets.select(col("__id"), explode(col("__set")).as("__s"))
-    val sigs = sigsFromShingleTable(exploded, numHashes)
+    val sigs = sets
+      .filter(size(col("__set")) > 0)
+      .select(col("__id"), minHashOfShingles(col("__set"), numHashes).as("__sig"))
 
     // certain dups: canonical set digest, group-min drop — exact by
     // construction, giant identical clusters cost one groupBy. EMPTY sets
@@ -645,39 +659,6 @@ object Dedup {
     verifiedBand.union(exactPairs).distinct()
   }
 
-  /** Signature table from a pre-exploded (id, shingle) table — the shared
-    * core of [[minHashSignatures]] for callers that already hold the
-    * shingle stream. */
-  private def sigsFromShingleTable(
-      exploded: DataFrame,
-      numHashes: Int
-  ): DataFrame = {
-    // native MinHashSeedsExpr: ONE md5 digest per shingle split into (a, b)
-    // universal-hash coefficients, no hex round-trip — bit-identical to the
-    // conv(substring(md5)) spec (asserted in ScaleSpec), so the DuckDB
-    // oracles are unchanged. Two projections on purpose: CollapseProject
-    // will not duplicate the non-cheap digest into each field reference.
-    val seeds = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.plans.MinHashSeedsExpr(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("__s")),
-        MinHashMod
-      )
-    )
-    val seeded = exploded
-      .select(col("__id"), seeds.as("__ab"))
-      .select(col("__id"), col("__ab.a").as("__a"), col("__ab.b").as("__b"))
-    val aggCols = (0 until numHashes).map { j =>
-      min((col("__a") + lit(j.toLong) * col("__b")) % MinHashMod).as(s"__h$j")
-    }
-    seeded
-      .groupBy("__id")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(
-        col("__id"),
-        array((0 until numHashes).map(j => col(s"__h$j")): _*).as("__sig")
-      )
-  }
-
   /** Near-dedup with exact verification: [[minHashVerifiedPairs]]
     * candidates, drop every doc with a VERIFIED smaller-id near-duplicate
     * (or, `transitive = true`, everything above its verified-cluster
@@ -705,8 +686,9 @@ object Dedup {
 
   /** Per-row 64-bit SimHash signatures (id, simhash), computed as
     * explode-tokens -> codegen'd hash aggregate with one bit-vote `sum`
-    * column per signature bit — the same reformulation that took MinHash out
-    * of interpreted higher-order functions (see [[minHashSignatures]]); the
+    * column per signature bit — the reformulation that first took MinHash
+    * out of interpreted higher-order functions, before its per-row kernel
+    * (see [[minHashSignatures]]); the
     * nested-HOF spec form lives in `TextFunctions.simHash` and this
     * aggregate is asserted bit-identical to it. Bit b of the result is
     * set iff more token hashes have bit b set than clear (ties -> 0), with

@@ -167,19 +167,15 @@ object Splits {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(shardCol))
       .orderBy(col(orderCol))
-    val nTokens = size(split(lower(col(textCol)), " "))
-    val startOffset =
-      coalesce(sum(nTokens.cast("long")).over(w) - nTokens, lit(0L))
+    val nTokens = col("n_tokens")
+    // ONE running offset (one Window operator) feeds both block columns
+    val start = col("__pack_start")
     df.filter(col(textCol).isNotNull)
-      .withColumn("n_tokens", nTokens)
-      .withColumn(
-        "block_id",
-        (startOffset / lit(blockTokens.toLong)).cast("long")
-      )
-      .withColumn(
-        "block_offset",
-        (startOffset % lit(blockTokens.toLong)).cast("long")
-      )
+      .withColumn("n_tokens", size(split(lower(col(textCol)), " ")))
+      .withColumn("__pack_start", coalesce(sum(nTokens.cast("long")).over(w) - nTokens, lit(0L)))
+      .withColumn("block_id", (start / lit(blockTokens.toLong)).cast("long"))
+      .withColumn("block_offset", (start % lit(blockTokens.toLong)).cast("long"))
+      .drop("__pack_start")
   }
 
   /** Deterministic k-fold assignment for cross-validation: adds `fold` in

@@ -518,12 +518,37 @@ object HashUtils {
     v
   }
 
-  /** Both 60-bit MinHash seeds from ONE digest: (nibbles 1-15, nibbles
-    * 16-30 mod `mod`) — the values `TextFunctions.minHashPre` derives via
-    * two conv(substring(md5)) chains (which digest the shingle twice). */
-  def minHashSeeds(s: org.apache.spark.unsafe.types.UTF8String, mod: Long): Array[Long] = {
-    val digest = md.get().digest(s.getBytes)
-    Array(prefix60(digest, 0), prefix60(digest, 15) % mod)
+  /** MinHash signature of one shingle array: per non-null shingle ONE md5
+    * digest split into the seeds a = nibbles 1-15 and b = nibbles 16-30 mod
+    * `mod`, and component j = min over shingles of `(a + j*b) mod mod` —
+    * bit-identical to the composed `conv(substring(md5(s)))` seeds
+    * (`TextFunctions.minHashPreSpec`) followed by a per-component `min`.
+    * Null for a NULL or empty array (no shingle, no signature); all
+    * components null when every element is null (the `min` of nothing). */
+  def minHashSignature(shingles: ArrayData, numHashes: Int, mod: Long): ArrayData = {
+    val n = shingles.numElements()
+    if (n == 0) return null
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    val digester = md.get()
+    var seen = false
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i)) {
+        val digest = digester.digest(shingles.getUTF8String(i).getBytes)
+        val a = prefix60(digest, 0)
+        val b = prefix60(digest, 15) % mod
+        var j = 0
+        while (j < numHashes) {
+          val h = (a + j * b) % mod
+          if (h < mins(j)) mins(j) = h
+          j += 1
+        }
+        seen = true
+      }
+      i += 1
+    }
+    if (seen) UnsafeArrayData.fromPrimitiveArray(mins)
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[AnyRef](numHashes))
   }
 
   private def compareUnsigned(a: Array[Byte], b: Array[Byte]): Int = {
@@ -882,55 +907,47 @@ case class Md5Prefix60Expr(child: Expression)
   override def prettyName: String = "md5_prefix60"
 }
 
-/** Both MinHash seeds (a, b) from ONE md5 digest as a struct<a:bigint,
-  * b:bigint> — bit-identical to the pair
-  * `(conv(substring(md5(s),1,15),16,10), conv(substring(md5(s),16,15),16,10) % mod)`
-  * that `TextFunctions.minHashPre` computes with TWO digest evaluations
-  * per shingle (the shared `md5(s)` node is duplicated inside the HOF
-  * lambda, where no subexpression elimination runs). Signature generation
-  * digests every shingle of every document — halving digests and skipping
-  * the hex round-trip is a direct cut to the dominant dedup cost. */
-case class MinHashSeedsExpr(child: Expression, mod: Long)
+/** A row's MinHash signature from its shingle array in one loop
+  * ([[HashUtils.minHashSignature]]): one md5 per shingle and `numHashes`
+  * running minimums — the per-row form of exploding the shingles into a
+  * `numHashes`-column `min` aggregate keyed by id, with no exploded rows,
+  * no aggregate and no shuffle. `array<bigint>` with nullable elements,
+  * the type of the aggregate form, so stored signature tables still
+  * union. Null for a NULL or empty input array. */
+case class MinHashSignatureExpr(child: Expression, numHashes: Int, mod: Long)
     extends UnaryExpression
     with Serializable {
+  require(numHashes >= 1, "numHashes must be >= 1")
   require(mod > 1, "mod must be > 1")
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
       case t =>
         TypeCheckResult.TypeCheckFailure(
-          s"minhash_seeds expects a string input, got $t"
+          s"minhash_signature expects an array<string> input, got $t"
         )
     }
 
-  override def dataType: DataType = StructType(
-    Seq(StructField("a", LongType, nullable = false),
-        StructField("b", LongType, nullable = false))
-  )
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
-  override def nullSafeEval(input: Any): Any = {
-    val seeds = HashUtils.minHashSeeds(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      mod
-    )
-    org.apache.spark.sql.catalyst.InternalRow(seeds(0), seeds(1))
-  }
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(input: Any): Any =
+    HashUtils.minHashSignature(input.asInstanceOf[ArrayData], numHashes, mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s => {
-      val seeds = ctx.freshName("seeds")
       s"""
-         |long[] $seeds = graft.plans.HashUtils.minHashSeeds($s, ${mod}L);
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { $seeds[0], $seeds[1] });
+         |${ev.value} = graft.plans.HashUtils.minHashSignature($s, $numHashes, ${mod}L);
+         |${ev.isNull} = ${ev.value} == null;
        """.stripMargin
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 
-  override def prettyName: String = "minhash_seeds"
+  override def prettyName: String = "minhash_signature"
 }
 
 /** Unicode canonical normalization (NFC/NFD/NFKC/NFKD) as a codegen'd

@@ -983,7 +983,7 @@ private[graft] object QueryShared {
     * md5-derived (a, b) seeds -> 16-component signatures -> 4 band keys ->
     * bucket-min pairs with full-signature agreement (`cl`), plus the exact
     * identical-signature pass (`ex`). NULL-text docs have no shingles:
-    * Spark's explode drops them from the signature table so they are always
+    * Spark's signature projection filters them out so they are always
     * retained; the WHERE mirrors that (without it DuckDB would give them a
     * shared NULL signature and drop all but one). */
   /** Shared DuckDB CTE chain replicating the portable MinHash signature,

@@ -909,4 +909,26 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("HashAggregate"), s"q_lang_id aggregates:\n$p")
   }
 
+  test("MinHash signatures are one per-row projection: no explode, no shuffle") {
+    // the native kernel replaces explode -> 16-column min aggregate ->
+    // exchange by id; the only exchange allowed is the round robin that
+    // ScanUtils.withScanParallelism puts on a narrow input
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    def exchanges(p: String) = "Exchange".r.findAllIn(p).length
+    val scanOnly = graft.operators.ScanUtils.withScanParallelism(docs)
+      .queryExecution.executedPlan.toString
+    val p = graft.operators.Dedup
+      .minHashSignatures(docs, "doc_id", "text", 1, 16)
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("Generate"), s"signatures explode shingles:\n$p")
+    assert(!p.contains("HashAggregate"), s"signatures aggregate:\n$p")
+    assert(!p.contains("hashpartitioning"), s"signatures shuffle by key:\n$p")
+    assert(exchanges(p) == exchanges(scanOnly), s"signatures add an exchange:\n$p")
+  }
+
+  test("packSequences computes its running offset with exactly one Window") {
+    val p = plan("q_pack_sequences")
+    assert("Window \\[".r.findAllIn(p).length == 1, s"expected one Window:\n$p")
+  }
+
 }

@@ -861,11 +861,41 @@ class ScaleSpec extends SparkSpec {
     assert(report.toSeq == Seq((1L, 1L, true), (2L, 0L, false), (3L, 1L, true)))
   }
 
+  /** The composed MinHash spec the native kernel replaces: explode an
+    * (id, arr) table's shingle arrays, the conv(substring(md5)) seeds of
+    * `minHashPreSpec` per shingle, then a per-component `min` grouped by
+    * id. Returns (id, sig-as-string) sorted, for row-multiset equality. */
+  private def composedMinHash(df: org.apache.spark.sql.DataFrame, numHashes: Int): Seq[(Long, String)] = {
+    val seeded = df.select(col("id"), explode(TextFunctions.minHashPreSpec(col("arr"))).as("ab"))
+    val mins = (0 until numHashes).map { j =>
+      min((col("ab.a") + lit(j.toLong) * col("ab.b")) % TextFunctions.MinHashMod).as(s"h$j")
+    }
+    sigRows(
+      seeded.groupBy("id").agg(mins.head, mins.tail: _*)
+        .select(col("id"), array((0 until numHashes).map(j => col(s"h$j")): _*).as("sig"))
+    )
+  }
+
+  /** The native kernel over the same (id, arr) table, rows without a
+    * signature (NULL or empty array) dropped. */
+  private def kernelMinHash(df: org.apache.spark.sql.DataFrame, numHashes: Int): Seq[(Long, String)] =
+    sigRows(
+      df.select(col("id"), TextFunctions.minHashOfShingles(col("arr"), numHashes).as("sig"))
+        .filter(col("sig").isNotNull)
+    )
+
+  private def sigRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] = {
+    assert(df.schema("sig").dataType == org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.LongType, containsNull = true))
+    df.select(col(df.columns(0)).cast("long"), to_json(col("sig")))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+  }
+
   test("native md5 digest expressions match their composed spec forms bit-for-bit") {
-    // the native Md5Prefix60Expr / MinHashSeedsExpr replace
+    // the native Md5Prefix60Expr / MinHashSignatureExpr replace
     // conv(substring(md5(s), ...), 16, 10) chains on every portable hash
-    // path (splits, DSIR buckets, shards, manifests, minhash seeds) — any
-    // divergence silently reassigns buckets everywhere, so pin identity
+    // path (splits, DSIR buckets, shards, manifests, minhash signatures) —
+    // any divergence silently reassigns buckets everywhere, so pin identity
     // over adversarial strings: unicode, empties, separators, long runs
     val strs = (0 until 500).map(i => s"s$i é中文 ${"x" * (i % 97)}") ++
       Seq("", " ", "\u0001\u0000", "shard:ep0:42", "a b c", "😀")
@@ -878,14 +908,66 @@ class ScaleSpec extends SparkSpec {
       .filter(col("native") =!= col("spec"))
       .count()
     assert(prefixDiff == 0, s"$prefixDiff md5Prefix60 divergences")
-    val seedDiff = df
-      .select(
-        to_json(TextFunctions.minHashPre(array(col("s")))).as("native"),
-        to_json(TextFunctions.minHashPreSpec(array(col("s")))).as("spec")
+    // the kernel's seeds: seed a is md5Prefix60 (pinned above); every
+    // string alone pins (a mod p, b) through components 0 and 1 of its
+    // signature, and 7-string windows pin the per-component minimum
+    val single = strs.zipWithIndex.map { case (s, i) => (i.toLong, Seq(s)) }
+    val windows = strs.indices.map(i => (1000L + i, strs.slice(i, i + 7)))
+    val arrs = (single ++ windows).toDF("id", "arr")
+    val native = kernelMinHash(arrs, 16)
+    assert(native.size == single.size + windows.size)
+    assert(native == composedMinHash(arrs, 16), "minHash signature divergences")
+  }
+
+  test("MinHash kernel equals the explode + seed + per-component min spec on edge cases") {
+    // NULL text, empty text and docs shorter than shingleK produce no
+    // signature row (explode drops them); 1 and 16 components
+    val docs = Seq[(Long, String)](
+      (1L, "the quick brown fox"), (2L, null), (3L, ""), (4L, "one"),
+      (5L, "two words"), (6L, "Three Word Doc"), (7L, "a  b"),
+      (8L, "x y z w v u"), (9L, "é中文 😀 tokens here"), (10L, " ")
+    ).toDF("doc_id", "text")
+    for (k <- 1 to 3; numHashes <- Seq(1, 16)) {
+      val spec = composedMinHash(
+        docs.select(col("doc_id").as("id"), TextFunctions.shingles(col("text"), k).as("arr")),
+        numHashes
       )
-      .filter(col("native") =!= col("spec"))
-      .count()
-    assert(seedDiff == 0, s"$seedDiff minHash seed divergences")
+      val got = sigRows(
+        Dedup.minHashSignatures(docs, "doc_id", "text", k, numHashes)
+          .select(col("__id"), col("__sig").as("sig"))
+      )
+      assert(got == spec, s"k=$k numHashes=$numHashes")
+      assert(got.forall(_._2.count(_ == ',') == numHashes - 1))
+      assert(!got.exists(_._1 == 2L), "NULL text must produce no signature")
+    }
+    // NULL elements are skipped; an all-NULL array is the all-NULL
+    // signature (min over no value), an empty or NULL array none at all
+    val arrs = Seq[(Long, Seq[String])](
+      (1L, Seq("a", null, "b")), (2L, Seq(null)), (3L, Seq()), (4L, null),
+      (5L, Seq("a", "b")), (6L, Seq("b", "a", "a"))
+    ).toDF("id", "arr")
+    for (numHashes <- Seq(1, 16)) {
+      val native = kernelMinHash(arrs, numHashes)
+      assert(native == composedMinHash(arrs, numHashes), s"numHashes=$numHashes")
+      assert(native.map(_._1) == Seq(1L, 2L, 5L, 6L))
+      val byId = native.toMap
+      assert(byId(2L) == Seq.fill(numHashes)("null").mkString("[", ",", "]"))
+      assert(byId(1L) == byId(5L) && byId(5L) == byId(6L))
+    }
+  }
+
+  test("minHashSignatures yields one signature per input row, never merged by id") {
+    // the per-row contract: rows sharing an id keep their own signatures
+    // (the oracle's per-row CTE), only shingle-less rows drop out
+    val docs = Seq[(Long, String)](
+      (1L, "alpha beta"), (1L, "gamma delta"), (2L, "alpha beta"), (3L, null)
+    ).toDF("doc_id", "text")
+    val sigs = Dedup.minHashSignatures(docs, "doc_id", "text", 1, 16)
+    val rows = sigRows(sigs.select(col("__id"), col("__sig").as("sig")))
+    assert(rows.map(_._1) == Seq(1L, 1L, 2L))
+    val one = rows.filter(_._1 == 1L).map(_._2)
+    assert(one.distinct.size == 2, s"id 1's rows were merged: $one")
+    assert(one.contains(rows.find(_._1 == 2L).get._2))
   }
 
   test("shardManifest checksums are order-independent and null-vs-empty distinct") {
