@@ -10,11 +10,15 @@ DuckDB against the raw parquet tables in <sf_dir>, then compare:
   - column name set (sorted by name, like the driver)
   - values: rows sorted, floats via repr, NaN/None normalized
 
+Each query prints one PASS/FAIL line as soon as it is decided, ending with
+the seconds it took (the DuckDB oracle query plus the comparison).
+
 Exit code 0 iff every query matches.
 """
 import json
 import math
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -102,13 +106,20 @@ def main() -> int:
     failures = []
     results = {}
     for name in sorted(oracle):
+        t0 = time.perf_counter()
         status = results[name] = judge(name)
+        elapsed = time.perf_counter() - t0
         ok = status.startswith("OK")
         if not ok:
             failures.append(name)
         # one line per query as soon as it is decided, so a redirected
-        # run shows its progress
-        print(f"{'PASS' if ok else 'FAIL'} {name}: {status}", flush=True)
+        # run shows its progress; the query's seconds (DuckDB oracle plus
+        # comparison) end its PASS/FAIL line
+        first, sep, rest = status.partition("\n")
+        print(
+            f"{'PASS' if ok else 'FAIL'} {name}: {first} [{elapsed:.1f} s]{sep}{rest}",
+            flush=True,
+        )
     print(f"\n{len(results) - len(failures)}/{len(results)} queries match")
     if json_out:
         for name, status in results.items():

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.DataFrame
+import graft.plans.{GramSet, SharedGramCountExpr}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Train/test decontamination: find (and drop) training documents that
@@ -10,18 +11,38 @@ import org.apache.spark.sql.functions._
   * (north-star extension; no reference counterpart).
   *
   * Scale shape: the eval set is small by construction, so its distinct
-  * n-gram set is broadcast; the training corpus streams once through
-  * explode → broadcast-hash-semi-join → per-doc aggregate. No shuffle of
-  * the corpus itself — only the (id, matched-gram) survivors reach the
-  * aggregate, with map-side partial counts. At 100 TB the only full pass
-  * is the n-gram explode, which is the irreducible work.
+  * n-gram set is built on the driver (one scan job collects the eval
+  * token arrays; the driver holds no more than a broadcast of the eval
+  * grams would gather there), and the training corpus streams once
+  * through ONE per-row native expression (`graft.plans.SharedGramCountExpr`)
+  * that counts each row's distinct grams found in the set. No explode, no
+  * join, no aggregate and no shuffle of the corpus: at 100 TB the only
+  * full pass is the per-row gram walk, which is the irreducible work.
   */
 object Decontam {
 
-  /** Per-training-doc contamination report: every row of `train` with
+  /** Per row of `train`, the number of its distinct word `n`-grams found
+    * anywhere in `test`'s `textCol` (both sides tokenized by
+    * `tokens`). EAGER: one scan job collects `test`'s token arrays and the
+    * gram set is built on the driver, once per call. */
+  private def sharedGramCount(test: DataFrame, textCol: String, n: Int): Column = {
+    require(n >= 1, "n-gram size must be >= 1")
+    val evalTokens = test.select(tokens(col(textCol))).collect().iterator
+      .map(_.getSeq[String](0))
+    GraftSqlBridge.column(
+      SharedGramCountExpr(
+        GraftSqlBridge.expression(tokens(col(textCol))), n, GramSet(evalTokens, n)
+      )
+    )
+  }
+
+  /** Per-training-row contamination report: every row of `train` with
     * `n_shared_grams` (distinct `n`-grams also present anywhere in `test`)
-    * and a `contaminated` flag. Documents shorter than `n` tokens have no
-    * n-grams and are never contaminated.
+    * and a `contaminated` flag. Rows with NULL text, or shorter than `n`
+    * tokens, have no n-grams and are never contaminated; an empty `test`
+    * flags nothing. Counted per row, not per id: rows sharing an id keep
+    * their own counts (`idCol` is not read). EAGER: see
+    * [[sharedGramCount]].
     */
   def contaminationReport(
       train: DataFrame,
@@ -29,47 +50,24 @@ object Decontam {
       idCol: String,
       textCol: String,
       n: Int = 3
-  ): DataFrame = {
-    require(n >= 1, "n-gram size must be >= 1")
-    val testGrams = broadcast(
-      test
-        .select(explode(shingles(col(textCol), n)).as("__gram"))
-        .distinct()
-    )
-    val shared = train
-      .select(col(idCol), array_distinct(shingles(col(textCol), n)).as("__g"))
-      .select(col(idCol), explode(col("__g")).as("__gram"))
-      .join(testGrams, Seq("__gram"))
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_shared_grams"))
+  ): DataFrame =
     train
-      .join(shared, Seq(idCol), "left")
-      .withColumn("n_shared_grams", coalesce(col("n_shared_grams"), lit(0L)))
+      .withColumn("n_shared_grams", sharedGramCount(test, textCol, n))
       .withColumn("contaminated", col("n_shared_grams") > 0)
-  }
 
-  /** Drop contaminated training documents (anti-join against the ids any of
-    * whose n-grams appear in `test`). */
+  /** Drop contaminated training rows: every row sharing a word `n`-gram
+    * with `test` goes, whatever its id (`idCol` is not read: a clean row
+    * sharing an id with a contaminated one stays, a contaminated row with
+    * a NULL id goes). Rows with NULL text or fewer than `n` tokens stay,
+    * and an empty `test` keeps every row. EAGER: see [[sharedGramCount]]. */
   def decontaminate(
       train: DataFrame,
       test: DataFrame,
       idCol: String,
       textCol: String,
       n: Int = 3
-  ): DataFrame = {
-    require(n >= 1, "n-gram size must be >= 1")
-    val testGrams = broadcast(
-      test
-        .select(explode(shingles(col(textCol), n)).as("__gram"))
-        .distinct()
-    )
-    val contaminatedIds = train
-      .select(col(idCol), explode(shingles(col(textCol), n)).as("__gram"))
-      .join(testGrams, Seq("__gram"), "left_semi")
-      .select(idCol)
-      .distinct()
-    train.join(contaminatedIds, Seq(idCol), "left_anti")
-  }
+  ): DataFrame =
+    train.filter(sharedGramCount(test, textCol, n) === 0)
 
   /** Cross-split leakage audit: for every document OUTSIDE the training
     * split, the fraction of its distinct word `n`-grams that also appear
@@ -148,7 +146,7 @@ object Decontam {
     * fraction (~ fpp per distinct gram) of clean docs — the safe direction
     * for leakage control. The result is therefore a SUBSET of
     * [[decontaminate]]'s and the only probabilistic operator in this
-    * object; use the exact form whenever the eval set broadcasts.
+    * object; use the exact form whenever the eval set fits on the driver.
     *
     * Scale shape: one filter-side aggregate builds the sketch (driver
     * merge of per-partition filters), then the corpus streams once

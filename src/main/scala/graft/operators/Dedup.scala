@@ -637,7 +637,9 @@ object Dedup {
         .distinct()
 
     val grams = exploded.select(col("__id"), unhex(md5(col("__s"))).as("__g"))
-    val sizes = exploded.groupBy("__id").agg(count(lit(1)).as("__n"))
+    // one distinct set per row, so its size is the shingle count (a NULL
+    // element counts, as it does in the explode feeding `grams`)
+    val sizes = sets.select(col("__id"), size(col("__set")).as("__n"))
     val inter = cand
       .join(grams.select(col("__id").as("id_a"), col("__g")), Seq("id_a"))
       .join(grams.select(col("__id").as("id_b"), col("__g")), Seq("id_b", "__g"))

@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -551,6 +552,48 @@ object HashUtils {
     else new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[AnyRef](numHashes))
   }
 
+  private val GramSeparator = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
+
+  /** The word `n`-gram of a token array starting at `start`: its `n`
+    * tokens joined with one space, the element `TextFunctions.shingles`
+    * builds at that position. Null when a token of the window is null (the
+    * shingle's `concat` is null then). Both sides of [[GramSet]] membership
+    * build their grams here. */
+  def ngramAt(
+      tokens: ArrayData,
+      start: Int,
+      n: Int
+  ): org.apache.spark.unsafe.types.UTF8String = {
+    val parts = new Array[org.apache.spark.unsafe.types.UTF8String](n)
+    var j = 0
+    while (j < n) {
+      if (tokens.isNullAt(start + j)) return null
+      parts(j) = tokens.getUTF8String(start + j)
+      j += 1
+    }
+    if (n == 1) parts(0) else org.apache.spark.unsafe.types.UTF8String.concatWs(GramSeparator, parts: _*)
+  }
+
+  /** Number of DISTINCT word `n`-grams of a token array that are in
+    * `grams` (a gram repeating inside the array counts once); 0 when the
+    * array has fewer than `n` tokens. One pass over the windows, no
+    * per-gram row; the per-row hit set is only allocated on a first hit. */
+  def sharedGramCount(tokens: ArrayData, n: Int, grams: GramSet): Long = {
+    val windows = tokens.numElements() - n + 1
+    if (windows <= 0 || grams.isEmpty) return 0L
+    var hits: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = null
+    var i = 0
+    while (i < windows) {
+      val g = ngramAt(tokens, i, n)
+      if (g != null && grams.contains(g)) {
+        if (hits == null) hits = new java.util.HashSet()
+        hits.add(g)
+      }
+      i += 1
+    }
+    if (hits == null) 0L else hits.size.toLong
+  }
+
   private def compareUnsigned(a: Array[Byte], b: Array[Byte]): Int = {
     var i = 0
     while (i < a.length) {
@@ -948,6 +991,111 @@ case class MinHashSignatureExpr(child: Expression, numHashes: Int, mod: Long)
     copy(child = newChild)
 
   override def prettyName: String = "minhash_signature"
+}
+
+/** An immutable set of word n-grams built on the driver, held by
+  * [[SharedGramCountExpr]] as one reference object. Plans print, compare
+  * and hash it by its size and a 128-bit content fingerprint (the wrapping
+  * sums of each distinct gram's two md5 halves, so the order the grams
+  * were added does not matter), never by its grams: plan strings stay
+  * small and canonicalization does not hash the whole set. */
+final class GramSet private (
+    grams: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]
+) extends Serializable {
+  private val (fpHi, fpLo) = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    var hi, lo = 0L
+    grams.forEach { g =>
+      val d = java.nio.ByteBuffer.wrap(md.digest(g.getBytes))
+      hi += d.getLong
+      lo += d.getLong
+    }
+    (hi, lo)
+  }
+
+  def size: Int = grams.size
+  def isEmpty: Boolean = grams.isEmpty
+  def contains(g: org.apache.spark.unsafe.types.UTF8String): Boolean = grams.contains(g)
+
+  override def equals(o: Any): Boolean = o match {
+    case g: GramSet => g.size == size && g.fpHi == fpHi && g.fpLo == fpLo
+    case _ => false
+  }
+  override def hashCode: Int = java.lang.Long.hashCode(fpHi ^ fpLo)
+  override def toString: String = f"GramSet($size grams, fp=$fpHi%016x$fpLo%016x)"
+}
+
+object GramSet {
+
+  /** The distinct word `n`-grams of token arrays (NULL arrays and arrays
+    * shorter than `n` add none), each built by [[HashUtils.ngramAt]] — the
+    * helper the kernel probes with. */
+  def apply(tokenArrays: Iterator[scala.collection.Seq[String]], n: Int): GramSet = {
+    require(n >= 1, "n-gram size must be >= 1")
+    val grams = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
+    tokenArrays.filter(_ != null).foreach { toks =>
+      val arr = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        toks.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray[Any]
+      )
+      var i = 0
+      while (i <= toks.length - n) {
+        val g = HashUtils.ngramAt(arr, i, n)
+        if (g != null) grams.add(g)
+        i += 1
+      }
+    }
+    new GramSet(grams)
+  }
+}
+
+/** Per row, the number of distinct word `n`-grams of a token array that
+  * are in a driver-held [[GramSet]] ([[HashUtils.sharedGramCount]]): one
+  * loop over the row's windows with no per-gram row — the per-row form of
+  * exploding the grams, joining them against the set and counting the
+  * distinct matches per id. `bigint`, never null: a NULL array counts 0,
+  * as does an array with fewer than `n` tokens. The set is one reference
+  * object of the generated code, not a literal. */
+case class SharedGramCountExpr(child: Expression, n: Int, grams: GramSet)
+    extends UnaryExpression
+    with Serializable {
+  require(n >= 1, "n-gram size must be >= 1")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case t =>
+        TypeCheckResult.TypeCheckFailure(
+          s"shared_gram_count expects an array<string> input, got $t"
+        )
+    }
+
+  override def dataType: DataType = LongType
+
+  override def nullable: Boolean = false
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val tokens = child.eval(input)
+    if (tokens == null) 0L
+    else HashUtils.sharedGramCount(tokens.asInstanceOf[ArrayData], n, grams)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gramsRef = ctx.addReferenceObj("grams", grams, classOf[GramSet].getName)
+    val c = child.genCode(ctx)
+    ev.copy(
+      code = code"""
+        |${c.code}
+        |long ${ev.value} = ${c.isNull} ? 0L
+        |  : graft.plans.HashUtils.sharedGramCount(${c.value}, $n, $gramsRef);
+       """.stripMargin,
+      isNull = FalseLiteral
+    )
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "shared_gram_count"
 }
 
 /** Unicode canonical normalization (NFC/NFD/NFKC/NFKD) as a codegen'd

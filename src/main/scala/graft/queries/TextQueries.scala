@@ -105,10 +105,10 @@ private[graft] object TextQueries {
           n = 3
         )
         .select("doc_id", "n_shared_grams", "contaminated")
-        // NO barrier here (unlike q_main_content): it measured par — the
-        // gram aggregate below the broadcast join is a shuffle boundary the
-        // sort sampling reuses — and the PlanSpec broadcast-gram-join guard
-        // reads this query's static plan
+        // NO barrier here (unlike q_main_content): the report is one
+        // per-row gram-kernel projection over the scan, and the PlanSpec
+        // decontamination guard reads this query's static plan (the kernel,
+        // no join or aggregate, only the orderBy's exchange)
         .orderBy("doc_id")
     }),
 

@@ -116,27 +116,28 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("WindowGroupLimit"), s"expected top-k pushdown:\n$p")
   }
 
-  test("decontamination joins the corpus against a broadcast gram set") {
-    // the report path: gram join must be broadcast (test set is small)
-    val p = plan("q_decontam")
-    assert(
-      p.contains("BroadcastHashJoin"),
-      s"expected broadcast gram join:\n$p"
-    )
-    // the filtering path: a broadcast LEFT SEMI against the gram set
+  test("decontamination is one per-row gram kernel: no explode, join, aggregate or added exchange") {
+    // the native gram-set kernel replaces explode -> broadcast gram join
+    // -> distinct aggregates -> id join: each plan holds the kernel and
+    // only the exchanges its input and orderBy bring
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dp = graft.operators.Decontam
-      .decontaminate(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 3
-      )
-      .queryExecution.executedPlan.toString
-    assert(
-      dp.contains("BroadcastHashJoin") && dp.contains("LeftSemi"),
-      s"expected broadcast semi-join against the test gram set:\n$dp"
-    )
+    val train = docs.filter(col("doc_id") % 10 =!= 0)
+    val test = docs.filter(col("doc_id") % 10 === 0)
+    def exchanges(p: String) = "Exchange".r.findAllIn(p).length
+    def physical(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    val report = plan("q_decontam")
+    val filtered = physical(
+      graft.operators.Decontam.decontaminate(train, test, "doc_id", "text", n = 3))
+    val reportBase = physical(
+      train.select("doc_id", "text").orderBy("doc_id"))
+    for ((p, base) <- Seq(report -> reportBase, filtered -> physical(train))) {
+      assert(p.contains("shared_gram_count"), s"expected the gram kernel:\n$p")
+      assert(!p.contains("Generate"), s"decontamination explodes grams:\n$p")
+      assert(!p.contains("Aggregate"), s"decontamination aggregates:\n$p")
+      assert(!p.contains("Join"), s"decontamination joins:\n$p")
+      assert(exchanges(p) == exchanges(base), s"decontamination adds an exchange:\n$p")
+    }
   }
 
   test("ivf assignment is expression-only: no centroid-table join") {
@@ -924,6 +925,19 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("HashAggregate"), s"signatures aggregate:\n$p")
     assert(!p.contains("hashpartitioning"), s"signatures shuffle by key:\n$p")
     assert(exchanges(p) == exchanges(scanOnly), s"signatures add an exchange:\n$p")
+  }
+
+  test("verified pairs take each set's size per row: no count aggregate keyed by id") {
+    // the shingle count is size(__set) of the one distinct set per row,
+    // not a count grouped by __id (one aggregate fewer). No total count of
+    // aggregates: when an earlier minHashVerifiedPairs call holds the same
+    // pairs, the plan prints that held table's plan as well
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val p = graft.operators.Dedup
+      .minHashVerifiedPairsPlan(graft.operators.Dedup.verifiedSetTable(docs, "doc_id", "text", 1), 0.8, 16, 4)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("size(__set"), s"expected per-row set sizes:\n$p")
+    assert("HashAggregate\\(keys=\\[__id#".r.findFirstIn(p).isEmpty, s"sizes aggregate by id:\n$p")
   }
 
   test("packSequences computes its running offset with exactly one Window") {

@@ -861,6 +861,129 @@ class ScaleSpec extends SparkSpec {
     assert(report.toSeq == Seq((1L, 1L, true), (2L, 0L, false), (3L, 1L, true)))
   }
 
+  /** The explode -> broadcast semi-join -> distinct-ids -> anti-join form
+    * the per-row kernel of `Decontam.decontaminate` replaced: the test
+    * reference. Kept (doc_id) rows, sorted. */
+  private def decontamReference(
+      train: org.apache.spark.sql.DataFrame,
+      test: org.apache.spark.sql.DataFrame,
+      n: Int
+  ): Seq[Long] = {
+    val testGrams = broadcast(
+      test.select(explode(TextFunctions.shingles(col("text"), n)).as("__gram")).distinct()
+    )
+    val contaminatedIds = train
+      .select(col("doc_id"), explode(TextFunctions.shingles(col("text"), n)).as("__gram"))
+      .join(testGrams, Seq("__gram"), "left_semi")
+      .select("doc_id")
+      .distinct()
+    train.join(contaminatedIds, Seq("doc_id"), "left_anti")
+      .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+  }
+
+  /** The report form the kernel replaced: distinct shared grams per id by
+    * explode -> broadcast join -> count, left-joined back by id. */
+  private def reportReference(
+      train: org.apache.spark.sql.DataFrame,
+      test: org.apache.spark.sql.DataFrame,
+      n: Int
+  ): Seq[(Long, Long, Boolean)] = {
+    val testGrams = broadcast(
+      test.select(explode(TextFunctions.shingles(col("text"), n)).as("__gram")).distinct()
+    )
+    val shared = train
+      .select(col("doc_id"), array_distinct(TextFunctions.shingles(col("text"), n)).as("__g"))
+      .select(col("doc_id"), explode(col("__g")).as("__gram"))
+      .join(testGrams, Seq("__gram"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_shared_grams"))
+    reportRows(
+      train.join(shared, Seq("doc_id"), "left")
+        .withColumn("n_shared_grams", coalesce(col("n_shared_grams"), lit(0L)))
+        .withColumn("contaminated", col("n_shared_grams") > 0)
+    )
+  }
+
+  private def reportRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Boolean)] =
+    df.select("doc_id", "n_shared_grams", "contaminated").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
+
+  test("decontamination kernel equals the explode + semi-join + distinct-ids reference") {
+    // empty tokens (double, leading, trailing spaces), case, non-ASCII
+    // lowercasing (İ, ß), surrogate pairs, tabs and newlines (not
+    // separators), a doc repeating one shared gram, NULL and short texts
+    val train = Seq[(Long, String)](
+      (1L, "alpha beta gamma delta"), (2L, "  alpha  beta gamma  "),
+      (3L, "ALPHA Beta GAMMA delta epsilon"), (4L, "İstanbul straße 😀 ß 𝄞 notes"),
+      (5L, "tab\tseparated words stay one token"), (6L, "new\nline words stay joined"),
+      (7L, "beta gamma beta gamma beta gamma beta gamma"), (8L, null), (9L, ""),
+      (10L, "one"), (11L, " "), (12L, "unrelated clean words entirely"),
+      (13L, "x  y"), (14L, "i̇stanbul STRASSE 😀 ß")
+    ).toDF("doc_id", "text")
+    val test = Seq[(Long, String)](
+      (100L, "zz Beta gamma DELTA yy beta gamma"), (101L, "İSTANBUL Straße 😀 ß 𝄞"),
+      (102L, "words stay one token"), (103L, "new\nline words"), (104L, null),
+      (105L, "short"), (106L, "q  y"), (107L, "")
+    ).toDF("doc_id", "text")
+    val noEval = test.filter(col("doc_id") < 0L)
+    // the local relation evaluates the kernel interpreted, the
+    // repartitioned input in generated code
+    for (n <- 1 to 4; (eval, label) <- Seq(test -> "eval", noEval -> "empty eval")) {
+      val want = decontamReference(train, eval, n)
+      val wantReport = reportReference(train, eval, n)
+      for (input <- Seq(train, train.repartition(3))) {
+        val kept = Decontam.decontaminate(input, eval, "doc_id", "text", n)
+          .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+        assert(kept == want, s"n=$n, $label")
+        val report = reportRows(Decontam.contaminationReport(input, eval, "doc_id", "text", n))
+        assert(report == wantReport, s"n=$n, $label")
+        assert(kept == report.filterNot(_._3).map(_._1), s"n=$n, $label")
+      }
+    }
+    // every occurrence of the repeated shared gram counts once
+    val repeated = reportRows(Decontam.contaminationReport(train, test, "doc_id", "text", 2))
+      .find(_._1 == 7L).get
+    assert(repeated == (7L, 1L, true), s"repeated shared gram: $repeated")
+    // an empty eval set keeps every row, NULL text included
+    assert(Decontam.decontaminate(train, noEval, "doc_id", "text", 3).count() == train.count())
+  }
+
+  test("decontamination drops rows, not ids") {
+    // a clean row sharing its id with a contaminated one stays; a
+    // contaminated row with a NULL id goes
+    val train = Seq[(Option[Long], String)](
+      (Some(1L), "alpha beta gamma delta"), (Some(1L), "clean words only here"),
+      (None, "alpha beta gamma epsilon"), (Some(2L), "other clean words")
+    ).toDF("doc_id", "text")
+    val test = Seq((100L, "alpha beta gamma")).toDF("doc_id", "text")
+    val kept = Decontam.decontaminate(train, test, "doc_id", "text", 3)
+      .collect().map(r => (Option(r.get(0)), r.getString(1))).toSet
+    assert(kept == Set((Some(1L), "clean words only here"), (Some(2L), "other clean words")))
+    val report = Decontam.contaminationReport(train, test, "doc_id", "text", 3)
+      .collect().map(r => (r.getString(1), r.getLong(2))).toMap
+    assert(report == Map(
+      "alpha beta gamma delta" -> 1L, "clean words only here" -> 0L,
+      "alpha beta gamma epsilon" -> 1L, "other clean words" -> 0L
+    ))
+  }
+
+  test("a 10k-gram set prints as its size and fingerprint, compares by content") {
+    val words = (0 until 10000).map(i => s"w$i")
+    val test = Seq((100L, words.mkString(" "))).toDF("doc_id", "text")
+    val train = Seq((1L, "w7 nothing"), (2L, "clean text")).toDF("doc_id", "text")
+    val out = Decontam.decontaminate(train, test, "doc_id", "text", n = 1)
+    val explained = out.queryExecution.toString
+    assert(explained.contains("GramSet(10000 grams"), explained.take(2000))
+    assert(explained.length < 8192, s"plan text is ${explained.length} chars")
+    assert(out.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(2L))
+    // equal content in another order is the same set; one gram more is not
+    val a = graft.plans.GramSet(Iterator(words), 1)
+    val b = graft.plans.GramSet(Iterator(words.reverse, words.take(3)), 1)
+    val c = graft.plans.GramSet(Iterator(words :+ "extra"), 1)
+    assert(a == b && a.hashCode == b.hashCode && a.toString == b.toString)
+    assert(a != c && a.size == 10000 && c.size == 10001)
+  }
+
   /** The composed MinHash spec the native kernel replaces: explode an
     * (id, arr) table's shingle arrays, the conv(substring(md5)) seeds of
     * `minHashPreSpec` per shingle, then a per-component `min` grouped by
