@@ -116,7 +116,7 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("WindowGroupLimit"), s"expected top-k pushdown:\n$p")
   }
 
-  test("decontamination is one per-row gram kernel: no explode, join, aggregate or added exchange") {
+  test("decontamination is one gram kernel: no explode, join, aggregate or added exchange") {
     // the native gram-set kernel replaces explode -> broadcast gram join
     // -> distinct aggregates -> id join: each plan holds the kernel and
     // only the exchanges its input and orderBy bring
