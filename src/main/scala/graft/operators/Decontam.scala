@@ -136,64 +136,6 @@ object Decontam {
       )
   }
 
-  /** Sketch-based decontamination for when even the eval n-gram set is too
-    * large to broadcast exactly: compile the eval grams into a Bloom
-    * filter (constant size for a chosen false-positive rate) and drop
-    * every training doc with at least one probable-member gram.
-    *
-    * Bloom filters have NO false negatives, so every truly contaminated
-    * document is guaranteed dropped; false positives over-drop a bounded
-    * fraction (~ fpp per distinct gram) of clean docs — the safe direction
-    * for leakage control. The result is therefore a SUBSET of
-    * [[decontaminate]]'s and the only probabilistic operator in this
-    * object; use the exact form whenever the eval set fits on the driver.
-    *
-    * Scale shape: one filter-side aggregate builds the sketch (driver
-    * merge of per-partition filters), then the corpus streams once
-    * through explode → membership test → distinct-id anti-join. The
-    * membership probe is a broadcast of one fixed-size bit array no
-    * matter how many eval grams exist — and it is Spark's native
-    * `BloomFilterMightContain` expression (the one runtime bloom-filter
-    * joins inject), NOT a Scala UDF, so the probe stays inside
-    * whole-stage codegen on the full exploded gram stream. Grams are
-    * keyed by xxhash64 on BOTH the build and probe sides (the native
-    * probe tests 64-bit keys), which adds only a ~n/2^64 hash-collision
-    * term to fpp and keeps the no-false-negative guarantee. */
-  def bloomDecontaminate(
-      train: DataFrame,
-      test: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      fpp: Double = 0.001
-  ): DataFrame = {
-    require(n >= 1, "n-gram size must be >= 1")
-    require(fpp > 0 && fpp < 1, "fpp must be in (0, 1)")
-    val grams = test
-      .select(explode(shingles(col(textCol), n)).as("__gram"))
-      .distinct()
-    val numGrams = grams.count()
-    if (numGrams == 0) train
-    else {
-      // build over the same 64-bit keys the native probe tests (the
-      // putLong <-> mightContainLong contract lives in BloomUtils,
-      // shared with Joins.bloomSemiJoin); both sides hash StringType
-      // grams, so the type-identity requirement holds by construction
-      val probe = BloomUtils.probeColumn(
-        grams.select(xxhash64(col("__gram")).as("__h")),
-        numGrams,
-        fpp,
-        xxhash64(col("__gram"))
-      )
-      val hitIds = train
-        .select(col(idCol), explode(shingles(col(textCol), n)).as("__gram"))
-        .filter(col("__gram").isNotNull && probe)
-        .select(idCol)
-        .distinct()
-      train.join(hitIds, Seq(idCol), "left_anti")
-    }
-  }
-
   /** Fuzzy (near-duplicate) contamination matches: training docs whose
     * MinHash signature near-matches an eval doc — the rung between exact
     * n-gram decontamination (verbatim leakage) and embedding-based

@@ -854,30 +854,6 @@ object Dedup {
     df.join(losers, df(idCol) === col("__loser"), "left_anti")
   }
 
-  /** Hamming-distance dedup over ANY precomputed 64-bit signature table —
-    * the generic core of [[dedupNearSimHash]] lifted out for non-text
-    * signatures (image dHash from `Multimodal.imageDHash`, audio
-    * fingerprints, feature hashes). Same two passes: identical signatures
-    * keep the minimum id; quarter-bucket pigeonhole pairing (EXACT for
-    * `maxHamming <= 3`) drops rows within distance of their bucket
-    * minimum; `transitive = true` upgrades to full component clustering.
-    * Returns the kept rows of `sigs`. Lazy. */
-  def dedupByHamming(
-      sigTable: DataFrame,
-      idCol: String,
-      sigCol: String,
-      maxHamming: Int = 3,
-      transitive: Boolean = false
-  ): DataFrame = {
-    val sigs = sigTable
-      .select(col(idCol).cast("long").as("__id"), col(sigCol).cast("long").as("simhash"))
-    sigTable.join(
-      hammingLosers(sigs, maxHamming, transitive).distinct(),
-      sigTable(idCol).cast("long") === col("__loser"),
-      "left_anti"
-    )
-  }
-
   /** Incremental SimHash dedup: clean a NEW batch against an EXISTING
     * corpus using only the corpus's stored (id, simhash) signature table —
     * the SimHash counterpart of [[dedupNearMinHashIncremental]], with the

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 /** Join helpers for skewed data (north-star extension).
   *
@@ -343,8 +345,7 @@ object Joins {
     * behind the filter removes them); false negatives cannot occur, so no
     * matching row is ever lost. Build and probe key on xxhash64 (the
     * native `BloomFilterMightContain` probe tests 64-bit keys, inside
-    * whole-stage codegen — no UDF; plumbing shared with the Bloom
-    * decontaminator via [[BloomUtils]]). xxhash64 is TYPE-sensitive
+    * whole-stage codegen — no UDF). xxhash64 is TYPE-sensitive
     * (hash(42: INT) != hash(42: BIGINT)), so the key column must have the
     * SAME Spark type on both sides — enforced loudly, because a silent
     * type coercion would turn into silent false negatives. NULL keys
@@ -388,11 +389,34 @@ object Joins {
     if (nKeys == 0) {
       left.filter(lit(false))
     } else {
-      val probe = BloomUtils.probeColumn(
-        keys.select(xxhash64(col(keyCol)).as("__h")),
-        nKeys,
-        fpp,
-        xxhash64(col(keyCol))
+      // the build side `putLong`s the xxhash64 keys (`stat.bloomFilter`
+      // on a LongType column) and the native probe tests them with
+      // `mightContainLong`, so both sides MUST hash the same value under
+      // the same Spark type — the type check above guarantees it
+      val bf = keys.select(xxhash64(col(keyCol)).as("__h")).stat.bloomFilter("__h", nKeys, fpp)
+      // a caller-supplied `expectedKeys` that grossly undercounts the true
+      // key cardinality stays EXACT (the semi-join behind the probe removes
+      // false positives) but silently degrades pruning; the built filter's
+      // observed fpp exposes exactly that saturation, so say so once here
+      val observedFpp = bf.expectedFpp()
+      if (observedFpp > math.min(0.9, fpp * 8)) {
+        org.slf4j.LoggerFactory
+          .getLogger(getClass)
+          .warn(
+            s"bloom filter sized for $nKeys keys is saturated " +
+              f"(observed fpp $observedFpp%.4f vs requested $fpp%.4f): " +
+              "the result stays exact but pre-shuffle pruning is degraded " +
+              "— pass a larger expectedKeys (or <= 0 for a counting pass)"
+          )
+      }
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      // a broadcast-literal bit array probed inside whole-stage codegen
+      val probe = GraftSqlBridge.column(
+        BloomFilterMightContain(
+          Literal.create(bos.toByteArray, BinaryType),
+          GraftSqlBridge.expression(xxhash64(col(keyCol)))
+        )
       )
       left
         .filter(col(keyCol).isNotNull && probe)

@@ -91,25 +91,4 @@ object Layout {
       .sortWithinPartitions("__h")
       .drop("__h")
   }
-  /** Per-file data-skipping statistics of a written parquet directory:
-    * one row per physical file with its row count and each requested
-    * column's min/max — exactly the bounds the reader's row-group/file
-    * pruning consults. Run it after [[zorderBy]]/[[hilbertBy]] to SEE the
-    * clustering: tight per-file ranges mean selective predicates skip
-    * most files; full-span ranges mean the layout does not help that
-    * column. One scan, one hash aggregate keyed by file name.
-    */
-  def fileSkippingReport(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      cols: Seq[String]
-  ): DataFrame = {
-    require(cols.nonEmpty, "at least one column")
-    val aggs = count(lit(1)).as("n_rows") +:
-      cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read
-      .parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
 }

@@ -565,7 +565,8 @@ object Splits {
     * data" step, done WITHOUT a global sort.
     *
     * Scale shape: two per-row codegen'd expressions — no shuffle at all
-    * here; the shuffle happens (once, keyed by shard) in [[writeShards]].
+    * here. A writer that wants one directory per shard repartitions once
+    * by `shard` and sorts within partitions by `sort_key`.
     */
   def shuffleIntoShards(
       df: DataFrame,
@@ -590,31 +591,6 @@ object Splits {
         md5(concat(lit("order:"), lit(salt), lit(":"), key))
       )
   }
-
-  /** Write the shuffled corpus as one directory per shard, each shard's
-    * files internally ordered by `sort_key`: `repartition(nShards, shard)`
-    * then `sortWithinPartitions(shard, sort_key)` then
-    * `partitionBy("shard")` — each task sorts and writes only its own
-    * shards, so a 100 TB corpus is shuffled once on the shard key and
-    * NEVER globally sorted. A training job reads `shard=k` directories in
-    * `sort_key` order and gets the reproducible permutation.
-    */
-  def writeShards(
-      df: DataFrame,
-      keyCol: String,
-      nShards: Int,
-      path: String,
-      salt: String = "",
-      format: String = "parquet"
-  ): Unit =
-    shuffleIntoShards(df, keyCol, nShards, salt)
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions("shard", "sort_key")
-      .write
-      .partitionBy("shard")
-      .format(format)
-      .mode("overwrite")
-      .save(path)
 
   /** Dataset-release manifest: per shard (or any grouping column), the row
     * count and an ORDER-INDEPENDENT content checksum — the integrity
@@ -659,27 +635,6 @@ object Splits {
 
   /** 60-bit prime modulus for [[shardManifest]] checksums. */
   val ChecksumMod: Long = 1152921504606846976L - 93L // 2^60 - 93, prime
-
-  /** Merge shard manifests from incremental batches WITHOUT rescanning
-    * data: checksums are commutative sums mod [[ChecksumMod]], so
-    * manifest(A ∪ B) = elementwise (n_rows added, checksums added mod p)
-    * — asserted in ScaleSpec. An incremental release appends a batch,
-    * manifests ONLY the batch, and merges; verification of the full
-    * dataset still needs just the merged manifest. */
-  def mergeManifests(manifests: DataFrame*): DataFrame = {
-    require(manifests.nonEmpty, "at least one manifest required")
-    manifests
-      .reduce(_ unionByName _)
-      .groupBy(manifests.head.columns.head)
-      .agg(
-        sum("n_rows").as("n_rows"),
-        // decimal accumulation: a long sum of k 60-bit checksums overflows
-        // at k >= 8 merged manifests
-        (sum(col("checksum").cast("decimal(20,0)")) % lit(ChecksumMod))
-          .cast("long")
-          .as("checksum")
-      )
-  }
 
   /** Token-budget mixture allocation — the "data recipe" planner (the
     * LLaMA-style per-source sampling-proportion/epoch table computed

@@ -1560,44 +1560,13 @@ object Stats {
     )
   }
 
-  /** Approximate per-group percentiles for corpus scale: Spark's
-    * `percentile_approx` (KLL-style mergeable sketch) with an `accuracy`
-    * dial — one streaming pass, map-side mergeable state of
-    * O(accuracy) per group, versus the exact percentile's full sort. Use
-    * when groups hold billions of rows; tests assert the sketch lands
-    * within one histogram bin of the exact answer. Probabilistic ->
-    * deliberately NOT an oracle query (same policy as Bloom
-    * decontamination). */
-  def approxPercentiles(
-      df: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      percentiles: Seq[Double],
-      accuracy: Int = 10000
-  ): DataFrame = {
-    require(percentiles.nonEmpty, "at least one percentile")
-    require(
-      percentiles.forall(p => p >= 0 && p <= 1),
-      "percentiles must be within [0, 1]"
-    )
-    val pcts = array(percentiles.map(lit): _*)
-    val base =
-      if (groupCols.isEmpty) df.groupBy()
-      else df.groupBy(groupCols.map(col): _*)
-    base
-      .agg(
-        percentile_approx(col(valueCol).cast("double"), pcts, lit(accuracy))
-          .as("percentiles")
-      )
-  }
-
   /** Per-group distinct-count sketch table: one binary DataSketches HLL
     * sketch per group in `distinct_sketch` — the PERSISTABLE, incremental
     * complement of [[profile]]'s one-shot approx mode. Store the sketch
     * table with the corpus; when a batch arrives, sketch only the batch
     * and [[hllMergeSketches]] the two tables — the accepted corpus is
     * never rescanned, the same production-ingestion shape as
-    * `Dedup.dedupNearMinHashIncremental`. Sketches are exact in sparse
+    * `Dedup.dedupNearMinHashIncremental`. HLL sketches are exact in sparse
     * mode (small per-group cardinalities) and ~2% at `lgK = 12` beyond
     * it; they merge associatively, so daily/hourly sketch tables roll up
     * into monthly ones by union alone.

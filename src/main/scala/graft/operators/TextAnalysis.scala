@@ -402,23 +402,6 @@ object TextAnalysis {
       .withColumn("has_blockword", coalesce(hits > 0, lit(false)))
   }
 
-  /** Drop every document containing a blockword ([[blockwordReport]]
-    * semantics); NULL-text rows survive — they cannot match. */
-  def filterBlockwords(
-      df: DataFrame,
-      textCol: String,
-      words: Seq[String]
-  ): DataFrame = {
-    require(words.nonEmpty, "blockword list must not be empty")
-    val lowered = words.map(_.toLowerCase).distinct
-    // explicit NULL guard: under legacy sizeOfNull, size(NULL) is -1, and
-    // a NULL-text row must survive regardless of that config
-    df.filter(
-      col(textCol).isNull ||
-        size(filter(tokens(col(textCol)), t => t.isin(lowered: _*))) === 0
-    )
-  }
-
   /** C4-style line-level page cleaning (the T5 paper's recipe): keep only
     * lines that END IN TERMINAL PUNCTUATION (period/!/?/closing quote),
     * carry at least `minWordsPerLine` words, and do not mention
@@ -573,17 +556,6 @@ object TextAnalysis {
         "has_blocked_phrase",
         coalesce(col(textCol).isNotNull && total > 0, lit(false))
       )
-  }
-
-  /** Drop every document containing a blocked phrase
-    * ([[blockPhraseReport]] semantics); NULL-text rows survive. */
-  def filterBlockPhrases(
-      df: DataFrame,
-      textCol: String,
-      phrases: Seq[String]
-  ): DataFrame = {
-    val total = blockedSpanCount(col(textCol), phrases)
-    df.filter(col(textCol).isNull || total === 0)
   }
 
   /** One-pass native phrase-span count (graft.plans.BlockedSpansExpr) —

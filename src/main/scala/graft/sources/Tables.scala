@@ -325,121 +325,4 @@ object Tables {
         "date_and_time",
         to_timestamp(col("date_and_time"), "yyyyMMdd'T'HHmmssSS")
       )
-
-  /** Result of [[compactParquetDir]]. */
-  final case class CompactionStats(
-      filesBefore: Int,
-      filesAfter: Int,
-      bytes: Long,
-      compacted: Boolean
-  )
-
-  /** Compact a parquet directory's many small files into
-    * `ceil(bytes / targetBytes)` files — the standard housekeeping pass
-    * after streaming ingest or a high-parallelism write leaves thousands
-    * of KB-sized files (each costing a task + an open/footer-read at every
-    * downstream scan; at 100 TB, file-count pathology dominates scan
-    * startup long before data volume does).
-    *
-    * No-op (returns `compacted = false`) when the directory already has
-    * <= the target file count — callers can loop it over partitions
-    * cheaply.
-    *
-    * ==Concurrency contract: NO concurrent readers or writers==
-    * The swap is a sibling staging write + two directory renames
-    * (`path` -> backup, staging -> `path`): a single rename cannot
-    * replace a non-empty directory on HDFS-style filesystems, so there is
-    * an unavoidable instant between the renames where `path` does not
-    * exist and a racing reader fails its file listing (and a reader that
-    * listed earlier can still glimpse old files). Run it in the
-    * maintenance window a plain-parquet (non-ACID) table already requires
-    * for overwrites; concurrent-safe compaction needs a transactional
-    * table format instead. The swap only proceeds after the staging
-    * write's `_SUCCESS` marker is verified, and any failure during the
-    * swap restores the original directory intact (asserted in
-    * SourcesSpec).
-    *
-    * Scale shape: one scan + one round-robin `repartition(n)` shuffle of
-    * the compacted data — no sort, no driver materialization (file
-    * listing is metadata-only).
-    */
-  def compactParquetDir(
-      spark: SparkSession,
-      path: String,
-      targetBytes: Long = 512L * 1024 * 1024
-  ): CompactionStats = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs
-      .listStatus(hPath)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val bytes = dataFiles.map(_.getLen).sum
-    val targetFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    if (dataFiles.length <= targetFiles)
-      CompactionStats(dataFiles.length, dataFiles.length, bytes, compacted = false)
-    else {
-      val staging = new org.apache.hadoop.fs.Path(
-        hPath.getParent,
-        s".${hPath.getName}__compacting"
-      )
-      fs.delete(staging, true)
-      spark.read
-        .parquet(path)
-        .repartition(targetFiles)
-        .write
-        .mode("overwrite")
-        .parquet(staging.toString)
-      // gate the swap on the committer's success marker: a staging dir
-      // left by a partially-failed write must never replace live data.
-      // Clusters running mapreduce.fileoutputcommitter.marksuccessfuljobs=
-      // false never emit the marker, so fall back to verifying the staging
-      // dir holds committed part files — the write call above returning
-      // normally plus visible part-*.parquet output is the committer's own
-      // success signal under that config.
-      val success =
-        new org.apache.hadoop.fs.Path(staging, "_SUCCESS")
-      // marker-less committers: part files alone can't distinguish a
-      // fully committed staging dir from stale/partial output, so verify
-      // the staging dir actually reparses as parquet with the SAME row
-      // count as the source listing snapshot (footer counts only — no
-      // data scan) before trusting it.
-      val hasParts = fs.exists(success) || {
-        val partsPresent = fs.listStatus(staging).exists(s =>
-          s.isFile && s.getPath.getName.startsWith("part-") &&
-            s.getPath.getName.endsWith(".parquet"))
-        partsPresent && {
-          try {
-            spark.read.parquet(staging.toString).count() ==
-              spark.read
-                .parquet(dataFiles.map(_.getPath.toString): _*)
-                .count()
-          } catch { case scala.util.control.NonFatal(_) => false }
-        }
-      }
-      if (!hasParts) {
-        fs.delete(staging, true)
-        throw new java.io.IOException(
-          s"staging write for $path has neither _SUCCESS nor part files; " +
-            "original left intact"
-        )
-      }
-      val backup = new org.apache.hadoop.fs.Path(
-        hPath.getParent,
-        s".${hPath.getName}__precompact"
-      )
-      fs.delete(backup, true)
-      if (!fs.rename(hPath, backup))
-        throw new java.io.IOException(s"could not stage $path for compaction")
-      if (!fs.rename(staging, hPath)) {
-        fs.rename(backup, hPath) // restore
-        throw new java.io.IOException(s"could not swap compacted $path")
-      }
-      fs.delete(backup, true)
-      val after = fs
-        .listStatus(hPath)
-        .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      CompactionStats(dataFiles.length, after, bytes, compacted = true)
-    }
-  }
 }

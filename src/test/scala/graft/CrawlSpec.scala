@@ -298,10 +298,6 @@ class CrawlSpec extends SparkSpec {
     assert(rep.toSeq == Seq(
       (1L, 2, true), (2L, 0, false), (3L, 3, true), (4L, -1, false), (5L, 0, false)
     ), s"${rep.mkString(";")}")
-    val kept = TextAnalysis
-      .filterBlockwords(docs, "text", words)
-      .select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(kept.toSeq == Seq(2L, 4L, 5L))
   }
 
   test("stripInvisibles: zero-widths, soft hyphen, BOM, controls removed; tab/newline kept") {
@@ -349,10 +345,6 @@ class CrawlSpec extends SparkSpec {
       (1L, 2, true), (2L, 1, true), (3L, 0, false),
       (4L, 1, true), (5L, -1, false), (6L, 0, false)
     ), s"${got.mkString(";")}")
-    val kept = TextAnalysis
-      .filterBlockPhrases(docs, "text", phrases)
-      .select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(kept.toSeq == Seq(3L, 5L, 6L))
   }
 
   test("fixEncoding: repairs cp1252 and latin-1 double encodings, leaves clean text alone") {
@@ -446,23 +438,26 @@ class CrawlSpec extends SparkSpec {
     val docs = spark.read
       .parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") < 150)
-    val verified = Dedup
-      .minHashVerifiedPairs(docs, "doc_id", "text", threshold = 0.5)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
-    val exact = Dedup
-      .ngramJaccardPairs(docs, "doc_id", "text", 1, 0.5)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
-    // verified pairs are a SUBSET of the true >= 0.5 pair set (candidate
-    // recall is what LSH trades), and every jaccard is bit-exact
-    assert(verified.nonEmpty)
-    verified.foreach { case (k, j) =>
-      assert(exact.contains(k), s"verified pair $k not in the exact >=0.5 set")
-      assert(j == exact(k), s"pair $k: verified $j != exact ${exact(k)}")
-    }
+    // the operator hands its persisted pair table to the caller: release it
+    val pairs = Dedup.minHashVerifiedPairs(docs, "doc_id", "text", threshold = 0.5)
+    try {
+      val verified = pairs
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+        .toMap
+      val exact = Dedup
+        .ngramJaccardPairs(docs, "doc_id", "text", 1, 0.5)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+        .toMap
+      // verified pairs are a SUBSET of the true >= 0.5 pair set (candidate
+      // recall is what LSH trades), and every jaccard is bit-exact
+      assert(verified.nonEmpty)
+      verified.foreach { case (k, j) =>
+        assert(exact.contains(k), s"verified pair $k not in the exact >=0.5 set")
+        assert(j == exact(k), s"pair $k: verified $j != exact ${exact(k)}")
+      }
+    } finally pairs.unpersist(blocking = true)
   }
 
   test("verified pairs: shuffles carry ids/digests, never text or shingle strings") {
@@ -556,12 +551,11 @@ class CrawlSpec extends SparkSpec {
       (5L, null.asInstanceOf[String]),             // NULL -> empty set
       (6L, "")                                     // empty -> empty set
     ).toDF("doc_id", "text")
-    val pairs = Dedup
+    val held = Dedup
       .minHashVerifiedPairs(docs, "doc_id", "text", threshold = 0.8, shingleK = 3)
-      .select("id_a", "id_b")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sorted
+    val pairs =
+      try held.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+      finally held.unpersist(blocking = true)
     assert(pairs.toSeq == Seq((1L, 2L)), s"spurious empty-set pairs: ${pairs.toSeq}")
     val kept = Dedup
       .dedupNearMinHashVerified(docs, "doc_id", "text", threshold = 0.8, shingleK = 3)

@@ -9,6 +9,23 @@ class EntrySpec extends SparkSpec {
   private def describe(e: Throwable): String =
     s"${e.getClass.getSimpleName}: ${e.getMessage}"
 
+  /** One query's canonical rows on sf0.001. The near-duplicate operators
+    * hand the table they persist to their caller, and the caller here is
+    * this sweep: it releases every CacheManager entry the query's plan
+    * reads, so no later test plans over a table this sweep left held. */
+  private def run(name: String): Seq[String] = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    try canon(df.collect())
+    finally {
+      import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+      val cache = spark.sharedState.cacheManager
+      df.queryExecution.analyzed.foreach { p =>
+        if (cache.lookupCachedData(spark, p).isDefined)
+          cache.uncacheQuery(spark, p, cascade = false, blocking = true)
+      }
+    }
+  }
+
   /** Every query's canonical rows on sf0.001 with ANSI off, run once and
     * shared by the ANSI test and the coverage test. A query that throws
     * keeps its exception under its name, so each test fails naming it. */
@@ -16,9 +33,8 @@ class EntrySpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.ansi.enabled")
     try {
       spark.conf.set("spark.sql.ansi.enabled", "false")
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> (try Right(canon(fn(spark, sfDir).collect()))
-        catch { case e: Throwable => Left(e) })
+      SparkEntry.queries.keys.toSeq.sorted.map { name =>
+        name -> (try Right(run(name)) catch { case e: Throwable => Left(e) })
       }.toMap
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
@@ -63,7 +79,7 @@ class EntrySpec extends SparkSpec {
       spark.conf.set("spark.sql.ansi.enabled", "true")
       base.foreach { case (name, expected) =>
         val got =
-          try canon(SparkEntry.queries(name)(spark, sfDir).collect())
+          try run(name)
           catch {
             case e: Throwable =>
               fail(s"$name fails under ANSI mode: ${describe(e)}")

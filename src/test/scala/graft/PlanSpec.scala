@@ -169,41 +169,6 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast bounds join:\n$p")
   }
 
-  test("GraftExtensions registers native functions for SQL text") {
-    graft.plans.GraftExtensions.register(spark)
-    val r = spark
-      .sql(
-        """SELECT
-          |  cosine_similarity_native(
-          |    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
-          |    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
-          |  squared_distance_native(
-          |    array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
-          |    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS d
-          |""".stripMargin
-      )
-      .head()
-    assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 4.0)
-    // arity is validated at the SQL layer
-    intercept[Exception] {
-      spark.sql("SELECT cosine_similarity_native(array(1.0D))").collect()
-    }
-    // hilbert_index and unicode_normalize ride the same registry
-    val h = spark
-      .sql(
-        """SELECT hilbert_index(1L, 0L, 1) AS h3,
-          |       hilbert_index(5L, 3L) AS hd,
-          |       unicode_normalize('cafe\u0301') AS nfc,
-          |       unicode_normalize('ﬁnal', 'NFKC') AS nfkc""".stripMargin
-      )
-      .head()
-    assert(h.getLong(0) == 3L) // (1,0) at bits=1 is the walk's last cell
-    assert(h.getString(2) == "caf\u00e9" && h.getString(3) == "final")
-    intercept[Exception] {
-      spark.sql("SELECT unicode_normalize('x', 'NFX')").collect()
-    }
-  }
-
   test("DSIR weights broadcast the ratio model and combine map-side") {
     val p = plan("q_dsir")
     // the corpus-sized per-doc bucket table joins the m-row ratio model
@@ -246,88 +211,6 @@ class PlanSpec extends SparkSpec {
       s"copy fan-out must broadcast the copies table:\n$plan")
     assert(!plan.contains("Exchange hashpartitioning"),
       s"amplification must not shuffle the corpus:\n$plan")
-  }
-
-  test("sketch aggregates are SQL-callable with unchanged guarantees") {
-    graft.plans.GraftExtensions.register(spark)
-    import graft.functions.Sketches
-    import org.apache.spark.sql.functions.col
-    // planted stream: value frequencies 60/25/10/5 — every value above
-    // n/(cap+1) = 100/4 = 25 MUST survive a capacity-3 Misra-Gries, and no
-    // reported count may undercount by more than 25
-    val vals = Seq.fill(60)("a") ++ Seq.fill(25)("b") ++
-      Seq.fill(10)("c") ++ Seq.fill(5)("d")
-    scala.util.Random.setSeed(7)
-    val df = scala.util.Random.shuffle(vals).map(Tuple1(_))
-    import spark.implicits._
-    df.toDF("v").createOrReplaceTempView("sketch_in")
-    val mg = spark
-      .sql("SELECT misra_gries(v, 3) AS sketch FROM sketch_in")
-      .head().getMap[String, Long](0)
-    assert(mg.contains("a"), s"guaranteed heavy hitter missing: $mg")
-    assert(mg("a") >= 60L - 25L && mg("a") <= 60L)
-    assert(mg.size <= 3)
-    // SQL result == Column-API result (same aggregator, same path)
-    val mgScala = df.toDF("v")
-      .agg(Sketches.mgSketch(col("v"), 3).as("sketch"))
-      .head().getMap[String, Long](0)
-    assert(mg.toMap == mgScala.toMap)
-    // count_min: never underestimates; bounded overestimate
-    val cm = spark
-      .sql("SELECT count_min(v, 4, 64) AS sketch FROM sketch_in")
-      .head().getSeq[Long](0).toArray
-    assert(cm.length == 4 * 64)
-    for ((v, n) <- Seq("a" -> 60L, "b" -> 25L, "c" -> 10L, "d" -> 5L)) {
-      val est = Sketches.CountMin.estimate(cm, 4, 64, v)
-      assert(est >= n, s"count-min underestimated $v: $est < $n")
-      assert(est <= n + 2L * 100L / 64L + 1L, s"overestimate too large for $v: $est")
-    }
-    // GROUP BY path: partial aggregation + merges must hold the guarantees
-    val grouped = spark
-      .sql(
-        """SELECT pmod(hash(v), 2) AS g, misra_gries(v, 3) AS sketch
-          |FROM sketch_in GROUP BY 1""".stripMargin
-      )
-      .collect()
-    assert(grouped.length == 2)
-    // static params must be literals
-    intercept[Exception] {
-      spark.sql("SELECT misra_gries(v) FROM sketch_in").collect()
-    }
-    intercept[Exception] {
-      spark.sql("SELECT count_min(v, 4) FROM sketch_in").collect()
-    }
-  }
-
-  test("RewriteHofVectorMath swaps HOF folds for native expressions") {
-    import graft.functions.VectorFunctions
-    import org.apache.spark.sql.functions.col
-    val df = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(50)
-    def q(d: org.apache.spark.sql.DataFrame) = d.select(
-      col("vec_id"),
-      VectorFunctions
-        .cosineSimilarity(col("embedding"), org.apache.spark.sql.functions
-          .reverse(col("embedding")))
-        .as("c"),
-      VectorFunctions
-        .squaredDistance(col("embedding"), org.apache.spark.sql.functions
-          .reverse(col("embedding")))
-        .as("d")
-    )
-    val plain = q(df).collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val prev = spark.experimental.extraOptimizations
-    try {
-      spark.experimental.extraOptimizations =
-        prev :+ graft.plans.RewriteHofVectorMath
-      val rewritten = q(df)
-      val p = rewritten.queryExecution.executedPlan.toString
-      assert(p.contains("cosine_similarity_native"), s"cosine not rewritten:\n$p")
-      assert(p.contains("squared_distance_native"), s"sqdist not rewritten:\n$p")
-      val got = rewritten.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-      assert(got.sameElements(plain), "rewrite must be bit-identical")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-    }
   }
 
   test("q7 nation-pair volume broadcasts the filtered dimension sides") {
@@ -417,27 +300,6 @@ class PlanSpec extends SparkSpec {
       plan("q_knn_graph").contains("WindowGroupLimit"),
       "per-source top-k must prune with size-k heaps"
     )
-  }
-
-  test("bloom decontamination probes via native might_contain, not a UDF") {
-    import spark.implicits._
-    val train = Seq(
-      (1L, "alpha beta gamma delta epsilon"),
-      (2L, "zeta eta theta iota kappa")
-    ).toDF("doc_id", "text")
-    val heldOut = Seq((10L, "alpha beta gamma")).toDF("doc_id", "text")
-    val out = graft.operators.Decontam
-      .bloomDecontaminate(train, heldOut, "doc_id", "text", n = 3)
-    val p = out.queryExecution.executedPlan.toString
-    assert(
-      p.contains("might_contain"),
-      s"expected the native BloomFilterMightContain probe:\n$p"
-    )
-    assert(!p.contains("UDF"), s"probe must not be a Scala UDF:\n$p")
-    // (no WholeStageCodegen assertion: the AQE plan string for a tiny
-    // LocalTableScan input prints the non-final plan without codegen
-    // spans; might_contain being a native codegen'd expression — not a
-    // ScalaUDF barrier — is exactly what the two asserts above pin.)
   }
 
   test("q5 filters customer and supplier by the region dim BEFORE the fact joins") {
@@ -929,15 +791,18 @@ class PlanSpec extends SparkSpec {
 
   test("verified pairs take each set's size per row: no count aggregate keyed by id") {
     // the shingle count is size(__set) of the one distinct set per row,
-    // not a count grouped by __id (one aggregate fewer). No total count of
-    // aggregates: when an earlier minHashVerifiedPairs call holds the same
-    // pairs, the plan prints that held table's plan as well
+    // not a count grouped by __id (one aggregate fewer). Every test that
+    // takes a held pair table releases it, so no cached table stands in
+    // for part of this plan and the aggregate count is the same alone and
+    // in the full suite
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val p = graft.operators.Dedup
       .minHashVerifiedPairsPlan(graft.operators.Dedup.verifiedSetTable(docs, "doc_id", "text", 1), 0.8, 16, 4)
       .queryExecution.executedPlan.toString
     assert(p.contains("size(__set"), s"expected per-row set sizes:\n$p")
     assert("HashAggregate\\(keys=\\[__id#".r.findFirstIn(p).isEmpty, s"sizes aggregate by id:\n$p")
+    assert(!p.contains("InMemoryRelation"), s"a held table stands in for part of the plan:\n$p")
+    assert("HashAggregate".r.findAllIn(p).length == 12, s"expected 12 HashAggregate nodes:\n$p")
   }
 
   test("packSequences computes its running offset with exactly one Window") {

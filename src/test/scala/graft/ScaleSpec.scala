@@ -598,38 +598,6 @@ class ScaleSpec extends SparkSpec {
     assert(!rows.map(_.getString(2)).sameElements(c.map(_.getString(2))))
   }
 
-  test("writeShards writes per-shard directories sorted by sort_key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
-    try {
-      graft.operators.Splits.writeShards(
-        spark.range(300).toDF("id"),
-        "id",
-        nShards = 8,
-        path = dir,
-        salt = "ep0"
-      )
-      val back = spark.read.parquet(dir)
-      assert(back.count() == 300L)
-      assert(
-        back.select("id").distinct().count() == 300L,
-        "shuffle must be a permutation — no loss, no duplication"
-      )
-      // within every written file, rows must be in sort_key order
-      import org.apache.spark.sql.expressions.Window
-      val w = Window
-        .partitionBy(input_file_name())
-        .orderBy(monotonically_increasing_id())
-      val disordered = back
-        .withColumn("__prev", lag("sort_key", 1).over(w))
-        .filter(col("__prev") > col("sort_key"))
-        .count()
-      assert(disordered == 0L, "files must be internally sorted by sort_key")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
-    }
-  }
-
   test("unigramLogProb scores rare-token docs below common-token docs") {
     val df = Seq((1L, "a a a a"), (2L, "a a a b")).toDF("doc_id", "text")
     val got = TextAnalysis
@@ -771,31 +739,6 @@ class ScaleSpec extends SparkSpec {
       val err = math.abs(est(c) - exact(c)).toDouble / math.max(exact(c), 1L)
       assert(err <= 0.05, s"$c: est ${est(c)} vs exact ${exact(c)}")
     }
-  }
-
-  test("bloomDecontaminate drops every truly contaminated doc (no false negatives)") {
-    val test = Seq((100L, "alpha beta gamma delta")).toDF("doc_id", "text")
-    val train = Seq(
-      (1L, "alpha beta gamma shared here"), // contaminated (3-gram overlap)
-      (2L, "beta gamma delta also shared"), // contaminated
-      (3L, "totally unrelated clean words"),
-      (4L, "nothing in common either way")
-    ).toDF("doc_id", "text")
-    val exact = Decontam
-      .decontaminate(train, test, "doc_id", "text", n = 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val bloom = Decontam
-      .bloomDecontaminate(train, test, "doc_id", "text", n = 3, fpp = 0.001)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(exact == Set(3L, 4L))
-    // bloom keeps a subset of the exactly-clean docs: false positives may
-    // over-drop, but contaminated ids 1 and 2 can never survive
-    assert(bloom.subsetOf(exact))
-    assert(!bloom.contains(1L) && !bloom.contains(2L))
-    // empty eval set is the identity
-    val noop = Decontam.bloomDecontaminate(
-      train, test.filter(col("doc_id") < 0L), "doc_id", "text", n = 3)
-    assert(noop.count() == train.count())
   }
 
   test("containmentPairs equals brute-force containment on real documents") {
@@ -1115,25 +1058,6 @@ class ScaleSpec extends SparkSpec {
       .collect().map(_.getLong(2)).head
     assert(oneChecksum(Seq((0, "a", null))) != oneChecksum(Seq((0, "a", ""))))
     assert(oneChecksum(Seq((0, "ab", ""))) != oneChecksum(Seq((0, "a", "b"))))
-    // mergeability: manifest(A union B) == mergeManifests(manifest(A), manifest(B))
-    val a = Seq((0, "a", "x"), (1, "c", "z")).toDF("shard", "c1", "c2")
-    val b = Seq((0, "b", "y"), (0, "d", "w")).toDF("shard", "c1", "c2")
-    val merged = Splits
-      .mergeManifests(
-        Splits.shardManifest(a, Seq("c1", "c2")),
-        Splits.shardManifest(b, Seq("c1", "c2"))
-      )
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-      .toSeq
-    val whole = Splits
-      .shardManifest(a.unionByName(b), Seq("c1", "c2"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-      .toSeq
-    assert(merged == whole, s"merge must equal whole-dataset manifest: $merged vs $whole")
   }
 
   test("crossSplitLeakage reports hand-checked per-doc 3-gram leak fractions") {
@@ -2023,37 +1947,6 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("fileSkippingReport shows zorder tightening per-file ranges") {
-    import graft.operators.Layout
-    val dir = java.nio.file.Files.createTempDirectory("skip").toString
-    val df = spark
-      .range(4096)
-      .select(
-        (col("id") % 64).as("x"),
-        (col("id") / 64).cast("long").as("y")
-      )
-    // hash-scrambled baseline vs morton-clustered layout
-    df.repartition(8, col("id") % 8).write.parquet(s"$dir/plain")
-    Layout.zorderBy(df, "x", "y", numPartitions = 8).write.parquet(s"$dir/z")
-    def meanRange(path: String): Double = {
-      val rows = Layout
-        .fileSkippingReport(spark, path, Seq("x", "y"))
-        .collect()
-      assert(rows.forall(_.getAs[Long]("n_rows") > 0))
-      rows.map(r =>
-        (r.getAs[Long]("max_x") - r.getAs[Long]("min_x")).toDouble +
-          (r.getAs[Long]("max_y") - r.getAs[Long]("min_y")).toDouble
-      ).sum / rows.length
-    }
-    val plain = meanRange(s"$dir/plain")
-    val z = meanRange(s"$dir/z")
-    assert(z < plain / 2,
-      s"zorder files must cover much tighter rectangles: z=$z plain=$plain")
-    intercept[IllegalArgumentException] {
-      Layout.fileSkippingReport(spark, dir, Seq())
-    }
-  }
-
   test("stratifiedHashSample applies per-stratum rates deterministically") {
     import graft.operators.Splits
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -2861,26 +2754,6 @@ class ScaleSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Stats.equiDepthBins(df, "v", 1) }
   }
 
-  test("Misra-Gries sketch keeps every frequent value within the error bound") {
-    import graft.functions.Sketches
-    // 400x "hot", 30x each of 20 mid values, 1x each of 100 rare values
-    val values = Seq.fill(400)("hot") ++
-      (1 to 20).flatMap(i => Seq.fill(30)(s"mid$i")) ++
-      (1 to 100).map(i => s"rare$i")
-    val n = values.length // 1100
-    val df = values.toDF("v").repartition(13) // force partial merges
-    val sketch = df
-      .agg(Sketches.mgSketch(col("v"), capacity = 10).as("sk"))
-      .head()
-      .getAs[Map[String, Long]]("sk")
-    assert(sketch.size <= 10)
-    val bound = n / 11 // n / (capacity + 1) = 100
-    // guarantee: freq > bound => present, and undercount <= bound
-    assert(sketch.contains("hot"))
-    assert(sketch("hot") <= 400 && sketch("hot") >= 400 - bound)
-    sketch.foreach { case (_, c) => assert(c > 0) }
-  }
-
   test("keySkewReport flags the hot key") {
     import graft.operators.Stats
     val df = (Seq.fill(8)("hot") ++ Seq("a", "b", "c", "d")).toDF("k")
@@ -3037,17 +2910,6 @@ class ScaleSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Stats.standardize(df, Seq("nope")) }
   }
 
-  test("approxPercentiles lands close to exact percentiles") {
-    import graft.operators.Stats
-    val df = (1 to 10000).map(i => ("g", i.toDouble)).toDF("grp", "v")
-    val got = Stats
-      .approxPercentiles(df, Seq("grp"), "v", Seq(0.5, 0.9), accuracy = 10000)
-      .head()
-      .getSeq[Double](1)
-    assert(math.abs(got(0) - 5000) <= 10, s"p50 was ${got(0)}")
-    assert(math.abs(got(1) - 9000) <= 10, s"p90 was ${got(1)}")
-  }
-
   test("randomProjection matches a brute-force JL sketch") {
     import graft.operators.Similarity
     val vecs = Seq(
@@ -3112,33 +2974,6 @@ class ScaleSpec extends SparkSpec {
     val binned = Stats.equiDepthBins(df, "v", 2, exact = true)
     assert(binned.filter(col("v").isNull).select("v_bin").head().isNullAt(0))
     assert(binned.filter(col("v").isNotNull && col("v_bin").isNull).count() == 0)
-  }
-
-  test("Count-Min sketch never underestimates and is partitioning-independent") {
-    import graft.functions.Sketches
-    val values = Seq.fill(400)("hot") ++
-      (1 to 20).flatMap(i => Seq.fill(30)(s"mid$i")) ++
-      (1 to 100).map(i => s"rare$i")
-    val truth = values.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val n = values.size
-    val depth = 4
-    val width = 256
-    def sketchOf(parts: Int): Array[Long] = values
-      .toDF("v")
-      .repartition(parts)
-      .agg(Sketches.cmSketch(col("v"), depth, width).as("sk"))
-      .head()
-      .getAs[scala.collection.Seq[Long]](0)
-      .toArray
-    val sk = sketchOf(13)
-    // cell-wise merge: the finished sketch is identical however the rows
-    // were partitioned
-    assert(sk.sameElements(sketchOf(1)), "sketch must be partitioning-independent")
-    truth.foreach { case (v, c) =>
-      val est = Sketches.CountMin.estimate(sk, depth, width, v)
-      assert(est >= c, s"Count-Min underestimated $v: $est < $c")
-      assert(est <= c + 4L * n / width, s"excess too large for $v: $est vs $c")
-    }
   }
 
   test("extractHtmlText strips structure, decodes entities, collapses space") {

@@ -204,100 +204,6 @@ class SourcesSpec extends SparkSpec {
     assert(joined.count() == 1000)
   }
 
-  test("compactParquetDir merges small files, preserves content, no-ops when compact") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
-    val df = spark.range(2000).select(
-      col("id"),
-      concat(lit("row-"), col("id")).as("s")
-    )
-    // simulate streaming-ingest fragmentation: 40 tiny files
-    df.repartition(40).write.mode("overwrite").parquet(dir)
-    val before = spark.read.parquet(dir)
-    val beforeRows = before.collect().map(_.toString).sorted.toSeq
-    val stats = Tables.compactParquetDir(spark, dir, targetBytes = 64L * 1024)
-    assert(stats.compacted && stats.filesBefore == 40, stats.toString)
-    assert(stats.filesAfter < stats.filesBefore, stats.toString)
-    val after = spark.read.parquet(dir)
-    assert(after.collect().map(_.toString).sorted.toSeq == beforeRows)
-    // compact to a single file, then the same call again must no-op
-    Tables.compactParquetDir(spark, dir, targetBytes = Long.MaxValue)
-    val again = Tables.compactParquetDir(spark, dir, targetBytes = Long.MaxValue)
-    assert(!again.compacted && again.filesBefore == 1, again.toString)
-    assert(
-      spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == beforeRows
-    )
-    // no staging/backup leftovers
-    val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
-    assert(!parent.exists(_.contains("__compacting")), parent.mkString(","))
-    assert(!parent.exists(_.contains("__precompact")), parent.mkString(","))
-  }
-
-  test(
-    "compactParquetDir succeeds without _SUCCESS markers " +
-      "(marksuccessfuljobs=false clusters)"
-  ) {
-    // clusters commonly disable the success marker; the swap gate must
-    // fall back to the committed part files instead of failing hard
-    val dir = Files.createTempDirectory("graft-compact-nomark").toString + "/t"
-    val df = spark.range(500).select(
-      col("id"),
-      concat(lit("row-"), col("id")).as("s")
-    )
-    df.repartition(20).write.mode("overwrite").parquet(dir)
-    val beforeRows = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    val prev = hconf.get(key)
-    hconf.set(key, "false")
-    try {
-      val ok = Tables.compactParquetDir(spark, dir, targetBytes = 64L * 1024)
-      assert(ok.compacted, ok.toString)
-      assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-        == beforeRows)
-    } finally {
-      if (prev == null) hconf.unset(key) else hconf.set(key, prev)
-    }
-    val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
-    assert(!parent.exists(_.contains("__compacting")), parent.mkString(","))
-    assert(!parent.exists(_.contains("__precompact")), parent.mkString(","))
-  }
-
-  test("compactParquetDir: a failed staging write never touches the original") {
-    val dir = Files.createTempDirectory("graft-compact-fail").toString + "/t"
-    val df = spark.range(500).select(
-      col("id"),
-      concat(lit("row-"), col("id")).as("s")
-    )
-    df.repartition(20).write.mode("overwrite").parquet(dir)
-    val beforeFiles = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted.toSeq
-    // truncate one source part file AFTER the listing snapshot: the staging
-    // write's scan then fails mid-job, compactParquetDir must throw BEFORE
-    // any swap and leave the original directory exactly as it found it
-    // (no __precompact backup, no replacement)
-    val victim = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
-    val goodBytes = java.nio.file.Files.readAllBytes(victim.toPath)
-    java.nio.file.Files.write(
-      victim.toPath, goodBytes.take(goodBytes.length / 2)
-    )
-    intercept[Throwable] {
-      Tables.compactParquetDir(spark, dir, targetBytes = 64L * 1024)
-    }
-    val afterFiles = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted.toSeq
-    assert(afterFiles == beforeFiles, "original data files must be untouched")
-    val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
-    assert(!parent.exists(_.contains("__precompact")), parent.mkString(","))
-    // restore the corrupted file: the same compaction then succeeds
-    java.nio.file.Files.write(victim.toPath, goodBytes)
-    val beforeRows = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val ok = Tables.compactParquetDir(spark, dir, targetBytes = 64L * 1024)
-    assert(ok.compacted, ok.toString)
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-      == beforeRows)
-  }
-
   test("resolvePath: absolute, project-relative, repo-relative modes") {
     import graft.sources.{Paths => GPaths}
     assert(GPaths.resolvePath("/abs/x.csv") == "/abs/x.csv")
