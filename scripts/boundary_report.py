@@ -33,15 +33,6 @@ ALLOWED = {
         "test reference: the HOF form the native cosine kernel must match",
     "VectorFunctions.hyperplaneBucketHof":
         "test reference: the HOF form the native LSH bucket kernel must match",
-    # open boundary candidates: only their own tests reach them (CHANGES.md
-    # FOUND); delete them, or give them a query, and drop the entries
-    "Layout.zorderBy": "open: Z-order write clustering, reached only by tests",
-    "Layout.hilbertBy": "open: Hilbert write clustering, reached only by tests",
-    "Similarity.ivfTopK": "open: MLlib-trained IVF top-k, reached only by tests",
-    "Similarity.writeIvfIndex": "open: IVF disk index writer, reached only by tests",
-    "Similarity.probeIvfIndex": "open: IVF disk index probe, reached only by tests",
-    "Similarity.writeIvfPqIndex": "open: IVF-PQ disk index writer, reached only by tests",
-    "Similarity.probeIvfPqIndex": "open: IVF-PQ disk index probe, reached only by tests",
 }
 
 MODIFIERS = r"(?:(?:final|sealed|abstract|case|implicit|lazy|override|inline|" \

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Physical data-layout helpers for write-time clustering (north-star
-  * extension; no reference counterpart).
+/** Clustering keys for write-time data layout (north-star extension; no
+  * reference counterpart).
   *
   * Parquet data skipping prunes row groups/files from per-column min/max
   * statistics, which only helps for columns the data is ordered by. A
@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * file covers a small rectangle of the (x, y) key space, so selective
   * predicates on either column (or both) skip most files. This is the
   * same layout trick behind Delta/Iceberg Z-ORDER clustering, expressed
-  * as plain codegen'd bit arithmetic.
+  * as plain codegen'd bit arithmetic. A writer clusters by a key with
+  * `repartitionByRange(n, key).sortWithinPartitions(key)`.
   */
 object Layout {
 
@@ -36,29 +37,6 @@ object Layout {
   def mortonCode(x: Column, y: Column): Column =
     spreadBits16(x).bitwiseOR(shiftleft(spreadBits16(y), 1))
 
-  /** Rewrite the DataFrame's layout so rows are range-partitioned and
-    * sorted by the Morton code of (`xCol`, `yCol`) — written out, each
-    * partition becomes a file covering a compact rectangle of the key
-    * space, making parquet min/max skipping effective on BOTH columns.
-    *
-    * One range-exchange shuffle (sampling pass + redistribution, like any
-    * global sort); the per-partition sort spills gracefully. The code
-    * column itself is dropped — it exists to order the write, not to be
-    * stored.
-    */
-  def zorderBy(
-      df: DataFrame,
-      xCol: String,
-      yCol: String,
-      numPartitions: Int
-  ): DataFrame = {
-    require(numPartitions >= 1, "numPartitions must be >= 1")
-    df.withColumn("__z", mortonCode(col(xCol), col(yCol)))
-      .repartitionByRange(numPartitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
-
   /** Hilbert-curve index of two columns' low `bits` bits — the
     * locality-preserving alternative to [[mortonCode]]: a Hilbert walk
     * never jumps across the key space (Z-order does at every quadrant
@@ -75,20 +53,4 @@ object Layout {
         bits
       )
     )
-
-  /** [[zorderBy]] with the Hilbert index as the clustering key — same
-    * single range-exchange shuffle, tighter per-file bounding boxes. */
-  def hilbertBy(
-      df: DataFrame,
-      xCol: String,
-      yCol: String,
-      numPartitions: Int,
-      bits: Int = 16
-  ): DataFrame = {
-    require(numPartitions >= 1, "numPartitions must be >= 1")
-    df.withColumn("__h", hilbertIndex(col(xCol), col(yCol), bits))
-      .repartitionByRange(numPartitions, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-  }
 }

@@ -17,10 +17,65 @@ import org.apache.spark.storage.StorageLevel
   *     so no full sort of the |queries| x |corpus| score table.
   *   - ANN: sign-random-projection buckets computed per-row (no shuffle),
   *     join restricted to matching buckets — the classic recall/cost dial
-  *     via number of hyperplanes. IVF-style coarse quantization would slot
-  *     in the same shape (bucket = nearest centroid id).
+  *     via number of hyperplanes. IVF coarse quantization is the same
+  *     shape with bucket = nearest centroid id ([[ivfTopKWithCentroids]]).
+  *
+  * Every top-k tier ranks through one step, [[rankPerQuery]], and returns
+  * `(query_id, neighbor_id, score, rank)`.
   */
 object Similarity {
+
+  /** The per-query top-k of every ANN tier: rows ranked by `score`, then
+    * `neighbor_id`, within each `by` group, numbered 1..k in `rank` —
+    * a `WindowGroupLimit` keeps per-partition heaps of size k, so the
+    * candidate table is never fully sorted. */
+  private def rankPerQuery(
+      scored: DataFrame,
+      k: Int,
+      score: Column,
+      by: String = "query_id"
+  ): DataFrame =
+    TopN.firstRow(
+      scored,
+      n = k,
+      partitionBy = Seq(col(by)),
+      orderBy = Seq(score, col("neighbor_id")),
+      returnIndexColumn = true,
+      indexColumnName = "rank"
+    )
+
+  /** Each query's `nProbe` nearest cells by squared Euclidean distance to
+    * the centroids (ties → lowest cell): `(query_id, __qv)` in,
+    * `(query_id, __qv, cell)` out. Queries are few, so the window over
+    * (query, cell) rows is trivially small. */
+  private def probeNearestCells(
+      queries: DataFrame,
+      centroids: Seq[Seq[Float]],
+      nProbe: Int
+  ): DataFrame = {
+    require(centroids.nonEmpty, "need at least one centroid")
+    require(nProbe >= 1, "nProbe must be >= 1")
+    queries
+      .withColumn(
+        "__cd",
+        array(centroids.map(c => squaredDistanceNative(col("__qv"), typedlit(c))): _*)
+      )
+      .select(
+        col("query_id"),
+        col("__qv"),
+        posexplode(col("__cd")).as(Seq("cell", "__qd"))
+      )
+      .withColumn(
+        "__rank",
+        row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy("query_id")
+            .orderBy(col("__qd"), col("cell"))
+        )
+      )
+      .filter(col("__rank") <= nProbe)
+      .select(col("query_id"), col("__qv"), col("cell"))
+  }
 
   /** Deterministic pseudo-random hyperplanes for sign-LSH (fixed seed —
     * identical across runs/engines; components are short decimals so SQL
@@ -65,15 +120,7 @@ object Similarity {
         col("neighbor_id"),
         cosineSimilarityNative(col("__qv"), col("__nv")).as("cosine")
       )
-    TopN
-      .firstRow(
-        scored,
-        n = k,
-        partitionBy = Seq(col("query_id")),
-        orderBy = Seq(col("cosine").desc, col("neighbor_id")),
-        returnIndexColumn = true,
-        indexColumnName = "rank"
-      )
+    rankPerQuery(scored, k, col("cosine").desc)
   }
 
   /** Int8 scalar quantization of an embedding column: per vector,
@@ -138,63 +185,20 @@ object Similarity {
         col("neighbor_id"),
         qcos(col("__qq"), col("__nq")).as("cosine_q")
       )
-    TopN.firstRow(
-      scored,
-      n = k,
-      partitionBy = Seq(col("query_id")),
-      orderBy = Seq(col("cosine_q").desc, col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
-  }
-
-  /** IVF-style approximate top-k: coarse-quantize the corpus with k-means
-    * (MLlib, deterministic seed), then search only the `nProbe` cells
-    * nearest to each query. The inverted-file analogue of [[annTopK]]'s
-    * hyperplane buckets — better-balanced cells on clustered data, at the
-    * cost of a training pass. Delegates cell assignment and the probed
-    * search to [[ivfTopKWithCentroids]] (cosine metric).
-    */
-  def ivfTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 2,
-      seed: Long = 42L,
-      maxIter: Int = 8
-  ): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
-    val featurized = corpus.withColumn("__features", array_to_vector(col(vecCol)))
-    // coarse quantization only needs roughly-placed centroids, not a
-    // converged clustering — cap the training iterations (MLlib defaults
-    // to 20); recall is governed by nProbe and asserted in ScaleSpec
-    val model = new KMeans()
-      .setK(nCells)
-      .setSeed(seed)
-      .setMaxIter(maxIter)
-      .setFeaturesCol("__features")
-      .setPredictionCol("__cell")
-      .fit(featurized)
-
-    val centroids = model.clusterCenters.map(_.toArray.map(_.toFloat).toSeq).toSeq
-    ivfTopKWithCentroids(corpus, queries, idCol, vecCol, k, centroids, nProbe)
+    rankPerQuery(scored, k, col("cosine_q").desc)
   }
 
   /** IVF top-k with EXPLICIT centroids (cell i = `centroids(i)`): every
     * corpus vector is assigned to its nearest centroid by squared Euclidean
     * distance (ties → lowest cell — the k-means quantization metric), each
-    * query probes its `nProbe` nearest cells, and only those cells are
-    * searched (ranking within cells is cosine).
+    * query probes its `nProbe` nearest cells by the same distance, and only
+    * those cells are searched (ranking within cells is cosine). The
+    * inverted-file analogue of [[annTopK]]'s hyperplane buckets.
     *
-    * Separated from the k-means training so the quantizer is pluggable —
-    * with deterministically CHOSEN centroids (e.g. a fixed arithmetic
-    * subsequence of corpus vectors) the whole operator becomes
-    * SQL-expressible and oracle-checkable, which MLlib training is not.
+    * The quantizer is an argument: [[kmeansTrain]] trains one
+    * deterministically, and a fixed CHOSEN codebook (e.g. an arithmetic
+    * subsequence of corpus vectors) makes the whole operator
+    * SQL-expressible and oracle-checkable.
     *
     * Scale shape: centroids are driver-side literals (an IVF codebook is
     * small by construction), so assignment is a pure per-row codegen'd
@@ -211,64 +215,27 @@ object Similarity {
       centroids: Seq[Seq[Float]],
       nProbe: Int
   ): DataFrame = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    require(nProbe >= 1, "nProbe must be >= 1")
-
-    // one native squared distance per centroid, materialized once per row in
-    // its own projection (CollapseProject will not duplicate non-cheap
-    // expressions)
-    def centroidDists(v: Column): Column =
-      array(centroids.map(c => squaredDistanceNative(v, typedlit(c))): _*)
-
+    val probed = probeNearestCells(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv")),
+      centroids,
+      nProbe
+    )
     // corpus side: ONE native codebook expression (argmin with ties to the
     // lowest cell) — the k-ary distance array would fall out of codegen
-    // for large codebooks; the probe side below genuinely needs all k
-    // distances for nProbe ranking and queries are few, so it keeps the
-    // array form
+    // for large codebooks; the probe side needs all k distances for the
+    // nProbe ranking and queries are few, so it keeps the array form
     val assigned = corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("__nv"))
-      .withColumn(
-        "__cell",
-        nearestCentroid(col("__nv"), centroids).getField("cluster")
-      )
-
-    // each query probes its nProbe nearest cells (queries are few — the
-    // window over (query, cell) rows is trivially small)
-    val probed = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__cd", centroidDists(col("__qv")))
-      .select(
-        col("query_id"),
-        col("__qv"),
-        posexplode(col("__cd")).as(Seq("__cell", "__qd"))
-      )
-      .withColumn(
-        "__rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("query_id")
-            .orderBy(col("__qd"), col("__cell"))
-        )
-      )
-      .filter(col("__rank") <= nProbe)
-      .select(col("query_id"), col("__qv"), col("__cell"))
-
+      .withColumn("cell", nearestCentroid(col("__nv"), centroids).getField("cluster"))
     val scored = assigned
-      .join(broadcast(probed), Seq("__cell"))
+      .join(broadcast(probed), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(
         col("query_id"),
         col("neighbor_id"),
         cosineSimilarityNative(col("__qv"), col("__nv")).as("cosine")
       )
-    TopN.firstRow(
-      scored,
-      n = k,
-      partitionBy = Seq(col("query_id")),
-      orderBy = Seq(col("cosine").desc, col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
+    rankPerQuery(scored, k, col("cosine").desc)
   }
 
   /** Deterministic, engine-portable Lloyd k-means over an embedding
@@ -426,101 +393,6 @@ object Similarity {
     } finally held.unpersist(blocking = false)
   }
 
-  /** Persist an IVF index to disk: every vector labeled with its nearest
-    * centroid ([[kmeansAssign]]) and written PARTITIONED BY the cell, so
-    * a probe reads only the probed cells' directories — the layout that
-    * makes ANN serve from a 100 TB corpus without scanning it. Pair with
-    * [[probeIvfIndex]]; centroids come from [[kmeansTrain]] (or any
-    * deterministic codebook). */
-  def writeIvfIndex(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Seq[Seq[Float]],
-      path: String
-  ): Unit = {
-    // the index must carry the id column probeIvfIndex will read back
-    require(
-      df.columns.contains(idCol),
-      s"idCol '$idCol' not in ${df.columns.mkString(", ")}"
-    )
-    kmeansAssign(df, vecCol, centroids, outCol = "cell")
-      .drop("sq_dist")
-      .write
-      .mode("overwrite")
-      .partitionBy("cell")
-      .parquet(path)
-  }
-
-  /** Probe a [[writeIvfIndex]] index: each query's `nProbe` nearest cells
-    * are computed driver-side (queries are small by construction), the
-    * index scan is FILTERED to that literal cell set — Catalyst turns it
-    * into `PartitionFilters`, so only the probed directories are read
-    * (plan-asserted in the suite) — and ranking within cells is cosine
-    * top-k via `WindowGroupLimit`. Same search semantics as
-    * [[ivfTopKWithCentroids]], but against the persisted layout. */
-  def probeIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Seq[Seq[Float]],
-      k: Int,
-      nProbe: Int
-  ): DataFrame = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    require(nProbe >= 1, "nProbe must be >= 1")
-    val probed = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn(
-        "__cd",
-        array(centroids.map(c => squaredDistanceNative(col("__qv"), typedlit(c))): _*)
-      )
-      .select(
-        col("query_id"),
-        col("__qv"),
-        posexplode(col("__cd")).as(Seq("cell", "__qd"))
-      )
-      .withColumn(
-        "__rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("query_id")
-            .orderBy(col("__qd"), col("cell"))
-        )
-      )
-      .filter(col("__rank") <= nProbe)
-      .select(col("query_id"), col("__qv"), col("cell"))
-    // model-sized driver action (<= |queries| * nProbe cells): the literal
-    // IN-list is what lets Catalyst prune partitions at the source
-    val cells = probed
-      .select("cell")
-      .distinct()
-      .collect()
-      .map(_.getInt(0))
-      .sorted
-    val scored = spark.read
-      .parquet(path)
-      .filter(col("cell").isin(cells.toIndexedSeq.map(Int.box): _*))
-      .select(col("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("__nv"))
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        cosineSimilarityNative(col("__qv"), col("__nv")).as("cosine")
-      )
-    TopN.firstRow(
-      scored,
-      n = k,
-      partitionBy = Seq(col("query_id")),
-      orderBy = Seq(col("cosine").desc, col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
-  }
-
   /** Approximate cosine top-k: candidates restricted to the query's
     * hyperplane-LSH bucket. Lower cost, recall controlled by plane count
     * (fewer planes => bigger buckets => higher recall & cost). */
@@ -550,14 +422,7 @@ object Similarity {
         col("neighbor_id"),
         cosineSimilarityNative(col("__qv"), col("__nv")).as("cosine")
       )
-    TopN.firstRow(
-      scored,
-      n = k,
-      partitionBy = Seq(col("query_id")),
-      orderBy = Seq(col("cosine").desc, col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
+    rankPerQuery(scored, k, col("cosine").desc)
   }
 
   /** OR-amplified hyperplane LSH top-k — the recall dial [[annTopK]] lacks:
@@ -608,14 +473,7 @@ object Similarity {
       // ranking so no neighbor appears twice in a query's top-k
       .groupBy("query_id", "neighbor_id")
       .agg(min("cosine").as("cosine"))
-    TopN.firstRow(
-      scored,
-      n = k,
-      partitionBy = Seq(col("query_id")),
-      orderBy = Seq(col("cosine").desc, col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
+    rankPerQuery(scored, k, col("cosine").desc)
   }
 
   /** k-NN graph over ONE corpus: for every vector, its top-k cosine
@@ -671,14 +529,7 @@ object Similarity {
         col("neighbor_id"),
         cosineSimilarityNative(col("__va"), col("__vb")).as("cosine")
       )
-    TopN.firstRow(
-      scored,
-      n = k,
-      partitionBy = Seq(col("id")),
-      orderBy = Seq(col("cosine").desc, col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
+    rankPerQuery(scored, k, col("cosine").desc, by = "id")
   }
 
   /** Contrastive training pairs: for every anchor document, `kPos`
@@ -1237,44 +1088,45 @@ object Similarity {
   ): DataFrame = {
     require(codebooks.nonEmpty, "need at least one subspace codebook")
     require(k >= 1, "k must be >= 1")
-    val sub = codebooks.head.head.length
-    val m = codebooks.size
-    // per-query lut columns: element c of __lut_s = ||q_s - centroid_c||^2
-    // (sequential-fold double, the oracle-portable arithmetic). Queries
-    // are small by construction, so the per-element lambda re-evaluation
-    // of the slice is irrelevant; the candidate side never runs this.
     // NULL query vectors are dropped here, not downstream: a NULL lut
     // would rank NULLS FIRST under the ascending distance sort and hand
     // the query k garbage neighbors instead of no rows
     val luts = queries
       .filter(col(qVecCol).isNotNull)
       .select(col(qIdCol).as("query_id"), col(qVecCol).as("__qv"))
-      .select(
-        col("query_id") +: (0 until m).map { s =>
-          transform(
-            array(codebooks(s).map(c => typedlit(c.toArray)): _*),
-            cv => squaredDistance(slice(col("__qv"), s * sub + 1, sub), cv)
-          ).as(s"__lut_$s")
-        }: _*
-      )
-    val dist = (0 until m)
-      .map(s =>
-        element_at(col(s"__lut_$s"), col(codesCol).getItem(s) + 1)
-      )
-      .reduceLeft(_ + _) // fixed s-ascending add order: engine-portable
+      .select(col("query_id") +: adcLuts(col("__qv"), codebooks): _*)
     val scored = db
       .select(col(dbIdCol).as("neighbor_id"), col(codesCol))
       .join(broadcast(luts), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dist.as("adc_dist"))
-    TopN.firstRow(
-      scored,
-      n = k,
-      partitionBy = Seq(col("query_id")),
-      orderBy = Seq(col("adc_dist"), col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
+      .select(
+        col("query_id"),
+        col("neighbor_id"),
+        adcDistance(col(codesCol), codebooks.size).as("adc_dist")
+      )
+    rankPerQuery(scored, k, col("adc_dist"))
   }
+
+  /** The ADC lookup tables of query vector `q`, columns `__lut_0` ..
+    * `__lut_{m-1}`: element c of `__lut_s` = ||q_s - centroid_c||^2
+    * (sequential-fold double, the oracle-portable arithmetic). Queries are
+    * small by construction, so the per-element lambda re-evaluation of the
+    * slice is irrelevant; the candidate side never runs this. */
+  private def adcLuts(q: Column, codebooks: Seq[Seq[Seq[Float]]]): Seq[Column] = {
+    val sub = codebooks.head.head.length
+    codebooks.indices.map { s =>
+      transform(
+        array(codebooks(s).map(c => typedlit(c.toArray)): _*),
+        cv => squaredDistance(slice(q, s * sub + 1, sub), cv)
+      ).as(s"__lut_$s")
+    }
+  }
+
+  /** A candidate's ADC distance: `__lut_0[codes[0]] + __lut_1[codes[1]] + …`,
+    * added in fixed s-ascending order (engine-portable). */
+  private def adcDistance(codes: Column, m: Int): Column =
+    (0 until m)
+      .map(s => element_at(col(s"__lut_$s"), codes.getItem(s) + 1))
+      .reduceLeft(_ + _)
 
   /** Two-stage PQ retrieval — ADC shortlist, then EXACT re-rank: take the
     * [[pqTopK]] top-(k*expand) candidates per query, re-attach float
@@ -1329,14 +1181,7 @@ object Similarity {
         col("neighbor_id"),
         cosineSimilarityNative(col("__qv"), col("__nv")).as("cosine")
       )
-    TopN.firstRow(
-      rescored,
-      n = k,
-      partitionBy = Seq(col("query_id")),
-      orderBy = Seq(col("cosine").desc, col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
+    rankPerQuery(rescored, k, col("cosine").desc)
   }
 
   /** PQ tuning report — the ANN counterpart of
@@ -1415,10 +1260,10 @@ object Similarity {
   // ===========================================================================
   // IVF-PQ: the two tiers composed the way a billion-scale index actually
   // ships — a coarse quantizer routes each vector to a cell (search probes
-  // only nProbe cells: the IVF partition-pruning win), and PQ encodes the
-  // RESIDUAL vector - cellCentroid (residuals are tighter than raw vectors,
-  // so the same code budget quantizes finer). The index row is
-  // (id, cell, codes): bytes per vector, no floats anywhere at serve time.
+  // only nProbe cells), and PQ encodes the RESIDUAL vector - cellCentroid
+  // (residuals are tighter than raw vectors, so the same code budget
+  // quantizes finer). The index row is (id, cell, codes): bytes per vector,
+  // no floats anywhere at serve time.
   // ===========================================================================
 
   /** Residual of each vector against its nearest coarse centroid:
@@ -1480,8 +1325,7 @@ object Similarity {
   /** Build the IVF-PQ index rows `(idCol, cell, pq_codes)`: cell routing
     * plus PQ codes of the residual. Per-row codegen'd compute only — at
     * corpus scale this is the one full scan, and its output is the only
-    * thing search ever reads. Persist partitioned by `cell` (exactly
-    * [[writeIvfIndex]]'s layout) to make probes partition-pruned reads. */
+    * thing search ever reads. */
   def ivfPqIndex(
       df: DataFrame,
       idCol: String,
@@ -1511,56 +1355,18 @@ object Similarity {
       codebooks: Seq[Seq[Seq[Float]]],
       k: Int,
       nProbe: Int
-  ): DataFrame =
-    ivfPqScore(
-      index, idCol,
-      ivfPqProbeLuts(queries, qIdCol, qVecCol, coarse, codebooks, nProbe),
-      codebooks, k
-    )
-
-  /** The probed (query_id, cell, __lut_0..__lut_{m-1}) table — the ONE
-    * definition of IVF-PQ query-side preparation, shared by [[ivfPqTopK]]
-    * and [[probeIvfPqIndex]] so in-memory and at-rest search are equal by
-    * construction: nProbe nearest cells per query (tiny window over
-    * queries), then a per-(query, cell) ADC lookup table built from the
-    * query's residual against the PROBED cell. */
-  private def ivfPqProbeLuts(
-      queries: DataFrame,
-      qIdCol: String,
-      qVecCol: String,
-      coarse: Seq[Seq[Float]],
-      codebooks: Seq[Seq[Seq[Float]]],
-      nProbe: Int
   ): DataFrame = {
-    require(coarse.nonEmpty, "need at least one coarse centroid")
-    require(nProbe >= 1, "nProbe must be >= 1")
     require(codebooks.nonEmpty, "need at least one subspace codebook")
-    val sub = codebooks.head.head.length
-    val m = codebooks.size
     val cellArr = array(coarse.map(c => typedlit(c.toArray)): _*)
     // NULL query vectors dropped (same NULLS-FIRST hazard as pqTopK: the
     // probe window would hand them cells 0..nProbe-1 and garbage ranks)
-    queries
-      .filter(col(qVecCol).isNotNull)
-      .select(col(qIdCol).as("query_id"), col(qVecCol).as("__qv"))
-      .withColumn(
-        "__cd",
-        array(coarse.map(c => squaredDistanceNative(col("__qv"), typedlit(c))): _*)
-      )
-      .select(
-        col("query_id"),
-        col("__qv"),
-        posexplode(col("__cd")).as(Seq("cell", "__qd"))
-      )
-      .withColumn(
-        "__rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("query_id")
-            .orderBy(col("__qd"), col("cell"))
-        )
-      )
-      .filter(col("__rank") <= nProbe)
+    val probed = probeNearestCells(
+      queries
+        .filter(col(qVecCol).isNotNull)
+        .select(col(qIdCol).as("query_id"), col(qVecCol).as("__qv")),
+      coarse,
+      nProbe
+    )
       // the query's residual against the PROBED cell (not its own nearest):
       // ADC distance approximates ||q - x|| = ||qres_cell - res_x|| inside
       // that cell, so the lut must be built from the cell-local residual
@@ -1572,108 +1378,17 @@ object Similarity {
           (x, c) => (x.cast("double") - c.cast("double")).cast("float")
         )
       )
-      .select(
-        col("query_id") +: col("cell") +: (0 until m).map { s =>
-          transform(
-            array(codebooks(s).map(c => typedlit(c.toArray)): _*),
-            cv => squaredDistance(slice(col("__qres"), s * sub + 1, sub), cv)
-          ).as(s"__lut_$s")
-        }: _*
-      )
-  }
-
-  /** ADC scoring + per-query ranking over an IVF-PQ index against a
-    * [[ivfPqProbeLuts]] table: candidates cost m array lookups, the
-    * probed table is broadcast, ranking is (adc_dist, id) via
-    * `WindowGroupLimit`. Self-pairs excluded. */
-  private def ivfPqScore(
-      index: DataFrame,
-      idCol: String,
-      probed: DataFrame,
-      codebooks: Seq[Seq[Seq[Float]]],
-      k: Int
-  ): DataFrame = {
-    val m = codebooks.size
-    val dist = (0 until m)
-      .map(s => element_at(col(s"__lut_$s"), col("pq_codes").getItem(s) + 1))
-      .reduceLeft(_ + _)
+      .select(col("query_id") +: col("cell") +: adcLuts(col("__qres"), codebooks): _*)
     val scored = index
       .select(col(idCol).as("neighbor_id"), col("cell"), col("pq_codes"))
-      .join(
-        broadcast(probed),
-        Seq("cell")
-      )
+      .join(broadcast(probed), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), dist.as("adc_dist"))
-    TopN.firstRow(
-      scored,
-      n = k,
-      partitionBy = Seq(col("query_id")),
-      orderBy = Seq(col("adc_dist"), col("neighbor_id")),
-      returnIndexColumn = true,
-      indexColumnName = "rank"
-    )
-  }
-
-  /** Persist an IVF-PQ index to disk: the [[ivfPqIndex]] rows written
-    * PARTITIONED BY cell — the layout [[writeIvfIndex]] uses, but holding
-    * CODES instead of float vectors (the at-rest form a billion-scale
-    * index actually ships: bytes per vector, directories per cell, no
-    * floats anywhere). Pair with [[probeIvfPqIndex]]. */
-  def writeIvfPqIndex(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      coarse: Seq[Seq[Float]],
-      codebooks: Seq[Seq[Seq[Float]]],
-      path: String
-  ): Unit = {
-    require(
-      df.columns.contains(idCol),
-      s"idCol '$idCol' not in ${df.columns.mkString(", ")}"
-    )
-    ivfPqIndex(df, idCol, vecCol, coarse, codebooks)
-      .write
-      .mode("overwrite")
-      .partitionBy("cell")
-      .parquet(path)
-  }
-
-  /** Probe a [[writeIvfPqIndex]] index: the probed cell set is computed
-    * driver-side (model-sized: <= |queries| * nProbe cells) and pushed as
-    * a literal IN-list, so Catalyst prunes to the probed cell DIRECTORIES
-    * at the source (`PartitionFilters`, plan-asserted in the suite) and
-    * serve-time reads touch only codes — never a float, never an
-    * unprobed cell. Search semantics are EXACTLY [[ivfPqTopK]]'s (both
-    * run [[ivfPqProbeLuts]] + [[ivfPqScore]]). */
-  def probeIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      queries: DataFrame,
-      idCol: String,
-      qIdCol: String,
-      qVecCol: String,
-      coarse: Seq[Seq[Float]],
-      codebooks: Seq[Seq[Seq[Float]]],
-      k: Int,
-      nProbe: Int
-  ): DataFrame = {
-    // materialize the model-sized probe table ONCE: the cell-set collect
-    // and the broadcast inside ivfPqScore both read it — without the
-    // checkpoint the per-query window/centroid work runs twice
-    val probed =
-      ivfPqProbeLuts(queries, qIdCol, qVecCol, coarse, codebooks, nProbe)
-        .localCheckpoint()
-    val cells = probed
-      .select("cell")
-      .distinct()
-      .collect()
-      .map(_.getInt(0))
-      .sorted
-    val index = spark.read
-      .parquet(path)
-      .filter(col("cell").isin(cells.toIndexedSeq.map(Int.box): _*))
-    ivfPqScore(index, idCol, probed, codebooks, k)
+      .select(
+        col("query_id"),
+        col("neighbor_id"),
+        adcDistance(col("pq_codes"), codebooks.size).as("adc_dist")
+      )
+    rankPerQuery(scored, k, col("adc_dist"))
   }
 }
 

@@ -158,11 +158,11 @@ private[graft] object SimilarityQueries {
     }),
 
     // IVF approximate top-5 with a deterministic codebook: centroids are
-    // the corpus vectors at vec_id % 64 == 0 (8 cells at sf0.01), cosine
-    // assignment/probing — fully SQL-expressible, so unlike k-means IVF
-    // this variant is oracle-checked end to end. The k-means-trained path
-    // (Similarity.ivfTopK) shares this exact search code and is gated by
-    // the ScaleSpec recall assertion instead.
+    // the corpus vectors at vec_id % 64 == 0 (8 cells at sf0.01); cell
+    // assignment and probing use squared Euclidean distance, only the
+    // in-cell ranking is cosine — fully SQL-expressible, so the search is
+    // oracle-checked end to end. A kmeansTrain codebook runs the same
+    // search code and is gated by the ScaleSpec recall assertion instead.
     "q_ivf_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val centroids = e

@@ -154,4 +154,15 @@ class EntrySpec extends SparkSpec {
       case (name, Right(rows)) => assert(rows.size >= 0, s"$name failed")
     }
   }
+
+  test("every public operator is reached: scripts/boundary_report.py is clean") {
+    // README's boundary rule: a public object or def of src/main that no
+    // query, Bench pipeline, perfbench workload or script reaches fails
+    // here, naming it (the report needs only the sources and python3)
+    import scala.sys.process._
+    val out = new StringBuilder
+    val log = ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n'))
+    val code = Seq("python3", "scripts/boundary_report.py").!(log)
+    assert(code == 0 && out.isEmpty, s"boundary report exited $code:\n$out")
+  }
 }

@@ -243,16 +243,6 @@ class PlanSpec extends SparkSpec {
     assert(!readSchema.contains("value"), s"untouched column read:\n$readSchema")
   }
 
-  test("zorderBy range-partitions by the morton code") {
-    import org.apache.spark.sql.functions.col
-    val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val p = graft.operators.Layout
-      .zorderBy(df, "l_partkey", "l_suppkey", numPartitions = 8)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("rangepartitioning"), s"expected range exchange:\n$p")
-    assert(p.contains("Sort"), s"expected per-partition sort:\n$p")
-  }
-
   test("random projection broadcasts the sign matrix and aggregates map-side") {
     val p = plan("q_random_projection")
     assert(p.contains("BroadcastHashJoin"), s"sign matrix must broadcast:\n$p")
